@@ -3,6 +3,7 @@ package graft.engine
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.types._
 
 /** Minimal pg_catalog emulation for the pgwire sink: answers the
@@ -46,16 +47,20 @@ private[engine] final class PgCatalog(session: SparkSession) {
 
   /** (name, relkind) for every visible table/view: permanent tables
     * are 'r', temp/permanent views 'v' — the two kinds Spark has.
+    * Read from the session catalog itself: `session.catalog
+    * .listTables()` plans a SHOW TABLES command and collects it with
+    * a Spark job, which queues for the task slots behind real scans.
+    * `getTablesByName` skips a table another connection dropped since
+    * the listing, so a concurrent DROP cannot fail the listing.
     */
-  private def relations(): Seq[(String, String)] =
-    session.catalog.listTables().collect().toSeq.map { t =>
-      val kind = t.tableType match {
-        case "VIEW" | "TEMPORARY" => "v"
-        case _ if t.isTemporary   => "v"
-        case _                    => "r"
-      }
-      (t.name, kind)
-    }.sortBy(_._1)
+  private def relations(): Seq[(String, String)] = {
+    val cat = session.sessionState.catalog
+    val (temp, permanent) = cat.listTables(cat.getCurrentDatabase).partition(cat.isTempView)
+    val tables = cat.getTablesByName(permanent).map { t =>
+      (t.identifier.table, if (t.tableType == CatalogTableType.VIEW) "v" else "r")
+    }
+    (temp.map(id => (id.table, "v")) ++ tables).sortBy(_._1)
+  }
 
   /** Spark type → pg type name, the `format_type` rendering `\d`
     * shows in its Type column.
@@ -111,7 +116,9 @@ private[engine] final class PgCatalog(session: SparkSession) {
     if (sql.contains("pg_class") && sql.contains("c.oid") && sql.contains("relname OPERATOR")) {
       val pat = NamePattern.findFirstMatchIn(sql).map(_.group(1).replace("''", "'"))
       val rows = pat.toSeq.flatMap { p =>
-        val rx = try p.r catch { case _: Throwable => java.util.regex.Pattern.quote(p).r }
+        val rx = try p.r catch {
+          case _: java.util.regex.PatternSyntaxException => java.util.regex.Pattern.quote(p).r
+        }
         relations().collect {
           case (name, _) if rx.pattern.matcher(name).find() =>
             Row(Integer.valueOf(oidOf(name)), "public", name)

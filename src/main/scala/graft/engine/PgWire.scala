@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -85,11 +87,15 @@ import org.apache.spark.sql.types._
   * `spark.newSession()` over the shared external catalog (the same
   * visibility contract as the Connect service — [[Serve]]'s
   * registerShared tables are visible, another connection's temp
-  * views are not), and result sets stream through
+  * views are not). Every statement yields one result value — a
+  * schema and a row iterator — that simple Query, Describe and
+  * Execute all consume. The [[PgCatalog]] shim's answers already sit
+  * on the driver and go straight to the wire without a Spark job;
+  * every DataFrame result streams through
   * `Dataset.toLocalIterator` — one partition resident on the driver
-  * at a time, never a full `collect`, so an arbitrarily large result
-  * set reaches the client in bounded memory exactly like the
-  * reference's streamed RecordBatch encoder (`lib.rs:102-127`).
+  * at a time, so an arbitrarily large result set reaches the client
+  * in bounded memory exactly like the reference's streamed
+  * RecordBatch encoder (`lib.rs:102-127`).
   */
 object PgWire {
 
@@ -426,9 +432,9 @@ object PgWire {
                 val rfmts = Array.tabulate(nRFmt)(i => int16At(payload, off + 2 + 2 * i))
                 // sql() runs eagerly for commands — bound once HERE,
                 // so Describe/Execute never re-run a DDL
-                val df = inStatementGroup {
+                val r = inStatementGroup {
                   if (args.isEmpty) runStatement(session, pgcat, p.sql)
-                  else Core.writeTarget(p.sql) match {
+                  else Result(Core.writeTarget(p.sql) match {
                     // a parameterized INSERT is still a write: it must
                     // serialize with COPY commits on the same table and
                     // invalidate other sessions' cached relations — the
@@ -438,9 +444,9 @@ object PgWire {
                       refreshSessions(t)
                       d
                     case None => session.sql(p.rewritten, args)
-                  }
+                  })
                 }
-                portals(portal) = new Portal(df, resolveResultFormats(rfmts, df.schema))
+                portals(portal) = Portal(r, resolveResultFormats(rfmts, r.schema))
                 msg(out, '2')(_ => ())
               } catch { case e: Throwable => extError(out, errMsg(e)) }
             case 'D' => // Describe
@@ -466,14 +472,17 @@ object PgWire {
                         // prepared INSERT would commit it (and a
                         // parameterized one would commit NULLs). pg
                         // answers NoData for these; so do we.
-                        if (Core.writeTarget(s.sql).isDefined)
-                          org.apache.spark.sql.types.StructType(Nil)
-                        else if (s.nParams == 0) session.sql(s.sql).schema
+                        if (Core.writeTarget(s.sql).isDefined) StructType(Nil)
+                        // a catalog shape takes the shim's schema, as
+                        // Bind takes its rows: Spark cannot parse psql's
+                        // pg_catalog SQL
+                        else if (s.nParams == 0)
+                          pgcat.answer(s.sql).map(_._1).getOrElse(session.sql(s.sql).schema)
                         else session.sql(s.rewritten,
                           (1 to s.nParams).map(i => s"gp_$i" -> (null: Any)).toMap).schema
                       (schema, Array.fill(schema.size)(0))
                     }
-                  } else portals.get(name).map(p => (p.df.schema, p.resultFormats))
+                  } else portals.get(name).map(p => (p.result.schema, p.resultFormats))
                 } catch { case e: Throwable => extError(out, errMsg(e)); None }
               schemaOpt match {
                 case Some((s, f)) if s.nonEmpty => rowDescription(out, s, f)
@@ -486,18 +495,17 @@ object PgWire {
                 case None => extError(out, s"unknown portal '$portal'")
                 case Some(p) =>
                   try inStatementGroup {
-                    if (p.df.schema.isEmpty) {
-                      p.df.collect() // command frames are already materialized; no-op drain
-                      msg(out, 'C')(cstr(_, "OK"))
-                    } else {
+                    // a schema-free result is a command Bind already ran
+                    if (p.result.schema.isEmpty) msg(out, 'C')(cstr(_, "OK"))
+                    else {
                       // pg row-cap semantics: stream up to maxRows, then
-                      // PortalSuspended; the portal's iterator survives for
+                      // PortalSuspended; the result's iterator survives for
                       // the next Execute (this is what JDBC setFetchSize
                       // drives). maxRows <= 0 means stream everything.
-                      val it = p.iterator()
+                      val it = p.result.rows()
                       var n = 0L
                       while (it.hasNext && (maxRows <= 0 || n < maxRows)) {
-                        dataRow(out, it.next(), p.df.schema, p.resultFormats)
+                        dataRow(out, it.next(), p.result.schema, p.resultFormats)
                         n += 1
                       }
                       if (it.hasNext) msg(out, 's')(_ => ()) // PortalSuspended
@@ -588,16 +596,14 @@ object PgWire {
 
   /** Route one statement: known pg_catalog introspection shapes are
     * answered by the [[PgCatalog]] shim (psql `\dt`/`\d` queries
-    * Spark can't parse); everything else goes through [[Core.execute]]
-    * — the engine's single delegation point, which also gives pgwire
+    * Spark can't parse) straight from its rows, never through a
+    * DataFrame; everything else goes through [[Core.execute]] — the
+    * engine's single delegation point, which also gives pgwire
     * clients the `COPY ... TO` statement form.
     */
-  private def runStatement(session: SparkSession, pgcat: PgCatalog, sql: String): DataFrame =
+  private def runStatement(session: SparkSession, pgcat: PgCatalog, sql: String): Result =
     pgcat.answer(sql) match {
-      case Some((schema, rows)) =>
-        val l = new java.util.ArrayList[Row](rows.size)
-        rows.foreach(r => l.add(r))
-        session.createDataFrame(l, schema)
+      case Some((schema, rows)) => Result(schema, rows)
       case None =>
         val df = Core.execute(session, sql)
         // an INSERT through the query path must be visible to OTHER
@@ -605,7 +611,7 @@ object PgWire {
         // (parameterized extended-protocol INSERTs take the
         // session.sql path and rely on fresh-session listing)
         Core.insertTarget(sql).foreach(refreshSessions)
-        df
+        Result(df)
     }
 
   private def simpleQuery(session: SparkSession, pgcat: PgCatalog, in: DataInputStream,
@@ -625,13 +631,12 @@ object PgWire {
               case Some((tbl, cols, fmt, header)) =>
                 copyIn(session, in, out, tbl, cols, fmt, header)
               case None =>
-                val df = runStatement(session, pgcat, stmt)
-                if (df.schema.isEmpty) {
-                  df.collect() // command frames are already materialized; this is a no-op drain
-                  msg(out, 'C')(cstr(_, commandTag(stmt)))
-                } else {
-                  rowDescription(out, df.schema)
-                  val n = streamRows(out, df)
+                val r = runStatement(session, pgcat, stmt)
+                // a schema-free result is an already-run command
+                if (r.schema.isEmpty) msg(out, 'C')(cstr(_, commandTag(stmt)))
+                else {
+                  rowDescription(out, r.schema)
+                  val n = streamRows(out, r)
                   msg(out, 'C')(cstr(_, s"SELECT $n"))
                 }
             }
@@ -1379,15 +1384,12 @@ object PgWire {
       }
     }
 
-  /** Stream every row as a DataRow via `toLocalIterator` — one
-    * partition on the driver at a time (the bounded-memory analog of
-    * the reference's streamed batches). Returns the row count for
+  /** Send every row of `r` as a DataRow. Returns the row count for
     * CommandComplete.
     */
-  private def streamRows(out: DataOutputStream, df: DataFrame): Long = {
+  private def streamRows(out: DataOutputStream, r: Result): Long = {
     var n = 0L
-    if (df.schema.isEmpty) return 0L
-    val it = df.toLocalIterator()
+    val it = r.rows()
     while (it.hasNext) {
       dataRow(out, it.next())
       n += 1
@@ -1695,20 +1697,32 @@ object PgWire {
         throw new IllegalArgumentException("malformed binary numeric: truncated buffer")
     }
 
-  /** A bound portal: the DataFrame plus its live result iterator,
-    * created lazily at the first Execute and KEPT across Executes so
-    * the pg row-cap flow (Execute(maxRows) → PortalSuspended →
-    * Execute …) resumes where it left off — the wire behavior JDBC's
+  /** A statement's result as the wire sends it: its schema and its
+    * rows. The row iterator opens at first use and is KEPT, so the pg
+    * row-cap flow (Execute(maxRows) → PortalSuspended → Execute …)
+    * resumes where it left off — the wire behavior JDBC's
     * setFetchSize drives.
     */
-  private final class Portal(val df: DataFrame,
-      val resultFormats: Array[Int] = Array.empty) {
+  private final class Result(val schema: StructType, open: () => java.util.Iterator[Row]) {
     private var it: java.util.Iterator[Row] = _
-    def iterator(): java.util.Iterator[Row] = {
-      if (it == null) it = df.toLocalIterator()
+    def rows(): java.util.Iterator[Row] = {
+      if (it == null) it = open()
       it
     }
   }
+
+  private object Result {
+    def apply(schema: StructType, rows: Seq[Row]): Result =
+      new Result(schema, () => rows.iterator.asJava)
+    /** Stream through `toLocalIterator`: one partition resident on
+      * the driver at a time, so a large result reaches the client in
+      * bounded memory.
+      */
+    def apply(df: DataFrame): Result = new Result(df.schema, () => df.toLocalIterator())
+  }
+
+  /** A bound portal: its result and Bind's resolved result formats. */
+  private final case class Portal(result: Result, resultFormats: Array[Int])
 
   // ---- framing helpers --------------------------------------------
 

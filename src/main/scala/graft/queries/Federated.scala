@@ -121,6 +121,22 @@ object Federated {
     (port, tbl)
   }
 
+  /** Wire tasks (partitions) a self-federation stream may run at
+    * once on a scheduler `width` slots wide: HALF the width, at most
+    * `max`, floor 1. Server and client share one local[n] scheduler,
+    * so client partitions must never hold every task slot while the
+    * server needs slots to answer them (4 clients on local[4]
+    * deadlock into read timeouts; so would 2 on local[2]). Callers
+    * pass the running context's `defaultParallelism`, never
+    * `SPARK_GRAFT_CPUS`: a session built narrower than the
+    * environment says would otherwise get a cap that fills every
+    * slot. A production remote server has its own resources and
+    * takes the full fan-out. (local[1] cannot self-federate at all —
+    * the one slot can't be both client and server.)
+    */
+  private[graft] def wireSlots(width: Int, max: Int): Int =
+    math.min(max, math.max(1, width / 2))
+
   /** Federation over the WIRE PROTOCOL itself — the reference's
     * Postgres-connector path with zero JDBC involvement: the
     * customer table is served by this repo's own [[graft.engine
@@ -136,15 +152,7 @@ object Federated {
     */
   def pgWireFederation(s: SparkSession, dir: String): DataFrame = {
     val (port, tbl) = pgServerFor(s, dir)
-    // SELF-federation caveat: server and client share one local[n]
-    // scheduler, so client partitions must never hold every task
-    // slot while the server needs slots to answer them (4 clients on
-    // local[4] deadlocks into read timeouts; so would 2 on local[2]).
-    // Cap the wire parallelism at HALF the scheduler width, floor 1;
-    // a production remote server has its own resources and takes the
-    // full fan-out. (local[1] cannot self-federate at all — the one
-    // slot can't be both client and server.)
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    val parts = wireSlots(s.sparkContext.defaultParallelism, 4)
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
         "c_custkey", numPartitions = parts, where = Some("c_nationkey < 13"))
@@ -167,7 +175,7 @@ object Federated {
     */
   def pgWireFederationCopy(s: SparkSession, dir: String): DataFrame = {
     val (port, tbl) = pgServerFor(s, dir)
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    val parts = wireSlots(s.sparkContext.defaultParallelism, 4)
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
         "c_custkey", numPartitions = parts, where = Some("c_nationkey < 13"),
@@ -219,7 +227,7 @@ object Federated {
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     // same self-federation slot cap as the read queries: writer tasks
     // block on the server's commit, which needs scheduler slots
-    val parts = math.min(4, math.max(1, graft.engine.Core.defaultCpus / 2))
+    val parts = wireSlots(s.sparkContext.defaultParallelism, 4)
     graft.sources.PgFederation.writeTable(src, "127.0.0.1", port, tbl, parts)
     graft.sources.PgFederation.pgTable(s, "127.0.0.1", port, tbl,
         Seq("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),
@@ -285,14 +293,15 @@ object Federated {
       .filter(col("c_nationkey") < 13)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     // 2 writer partitions (one per shard) makes the routing exact
-    // (partition k → shard k) and honors the self-federation slot cap
-    // at the driver's widths (4/32). BELOW that floor two concurrent
-    // writers would hold every scheduler slot while the server's
-    // commit needs one — deadlock-to-timeout — so the scatter
-    // degrades to sequential per-shard COPYs of a hash split (a
-    // production remote has its own slots and always takes the
-    // parallel path).
-    if (graft.engine.Core.defaultCpus >= 4)
+    // (partition k → shard k) and fits the self-federation slot cap
+    // from a scheduler width of 4 up (two wire slots). BELOW that
+    // floor two concurrent writers would hold every scheduler slot
+    // while the server's commit needs one — deadlock-to-timeout — so
+    // the scatter degrades to sequential per-shard COPYs of a hash
+    // split (a production remote has its own slots and always takes
+    // the parallel path).
+    val width = s.sparkContext.defaultParallelism
+    if (width >= 4)
       graft.sources.PgFederation.writeShards(src, shards, numPartitions = 2)
     else shards.zipWithIndex.foreach { case (shard, i) =>
       graft.sources.PgFederation.writeTable(
@@ -304,7 +313,8 @@ object Federated {
       require(s.table(shard.table).limit(1).count() == 1L,
         s"scatter left shard ${shard.table} empty — routing collapsed")
     }
-    val parts = math.min(2, math.max(1, graft.engine.Core.defaultCpus / 4))
+    // both legs read at once, so each gets half the width
+    val parts = wireSlots(width / 2, 2)
     val legs = shards.map { shard =>
       graft.sources.PgFederation.pgTable(s, shard.host, shard.port, shard.table,
         Seq("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment"),
@@ -316,7 +326,7 @@ object Federated {
     // materialize each leg in its own job first (one client task +
     // one server scan fit in 2 slots), then union the local copies
     val gathered =
-      if (graft.engine.Core.defaultCpus >= 4) legs
+      if (width >= 4) legs
       else legs.zipWithIndex.map { case (l, i) =>
         graft.engine.Scratch.checkpoint(l, s"pg-scatter-leg$i") }
     graft.engine.Federation.unionShards(gathered)

@@ -31,34 +31,6 @@ class OracleBudgetSpec extends SparkSpec {
       java.nio.file.Paths.get(tool)), s"$tool not present in this environment")
   }
 
-  /** Bounded retry for steps that cross a REAL loopback socket (the
-    * federation queries' schema derivation executes a COPY round trip
-    * against the in-JVM fixture pg server): on a heavily loaded box
-    * the server's commit job can starve past PgClient's 120 s read
-    * timeout — an environmental flake that went red on the r21
-    * driver's run (456/457). The step is idempotent (the roundtrip
-    * query drops + re-creates its target each run), so up to three
-    * attempts make the gate load-proof without masking a real failure
-    * (a deterministic bug fails all three identically).
-    */
-  private def retrying[T](attempts: Int = 3)(step: => T): T = {
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try return step
-      catch {
-        case e: Throwable =>
-          last = e
-          i += 1
-          if (i < attempts) {
-            info(s"retry $i/${attempts - 1} after: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(160)}")
-            Thread.sleep(2000L * i)
-          }
-      }
-    }
-    throw last
-  }
-
   // side-channel oracles (trained IVF / PQ / SQ8 / simhash / BM25 /
   // compression / DSIR / BPE) only exist after their producing query
   // has run — run the producers ONCE at sf0.001 (cheap: only the SQL
@@ -111,9 +83,10 @@ class OracleBudgetSpec extends SparkSpec {
     val oracleJson = java.nio.file.Files.createTempFile("graft-oracle-sql", ".json")
     val schemaJson = java.nio.file.Files.createTempFile("graft-schemas", ".json")
     Verify.writeOracleJson(oracleJson.toString)
-    // the schema export executes the federation wire round trips —
-    // the one socket-timeout-prone step in the suite (see retrying)
-    retrying() { Verify.writeSchemaJson(schemaJson.toString, spark, Sf) }
+    // the schema export executes the federation wire round trips
+    // against the in-JVM pg server, whose slot caps come from this
+    // session's width (Federated.wireSlots)
+    Verify.writeSchemaJson(schemaJson.toString, spark, Sf)
     val out = new StringBuilder
     val code = Process(Seq("python3", "/root/repo/tools/check_types.py",
         "/root/testdata/sf0.01", oracleJson.toString, schemaJson.toString))

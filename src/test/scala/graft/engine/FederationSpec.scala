@@ -151,4 +151,18 @@ class FederationSpec extends SparkSpec {
     // rows (id = 0, 99) survive exactly once
     assert(u.filter(col("ID").isin(0L, 99L)).count() === 2)
   }
+
+  test("self-federation wire slots: half the scheduler width, at most max, floor 1") {
+    import graft.queries.Federated.wireSlots
+    // the width is an argument, so the cap is the caller's live
+    // context width and nothing the environment exports
+    assert(wireSlots(4, 4) === 2)  // local[4]: two wire tasks, two slots free
+    assert(wireSlots(32, 4) === 4) // capped
+    assert(wireSlots(2, 4) === 1)
+    assert(wireSlots(1, 4) === 1)  // floor
+    // the scatter's two legs read at once: each takes half the width
+    assert(wireSlots(4 / 2, 2) === 1)
+    assert(wireSlots(8 / 2, 2) === 2)
+    assert(wireSlots(32 / 2, 2) === 2)
+  }
 }

@@ -98,9 +98,9 @@ class PgWireSpec extends SparkSpec {
   }
 
   test("catalog introspection over the wire (the reference's information_schema surface)") {
-    // psql's \d expands to pg_catalog queries (out of lite scope); the
-    // supported introspection route is Spark's SQL surface — SHOW
-    // TABLES / DESCRIBE — which the reference exposes via
+    // Spark's own SQL introspection surface — SHOW TABLES / DESCRIBE —
+    // beside psql's \dt / \d, which the PgCatalog shim answers (see
+    // the specs below); the reference exposes the same data via
     // information_schema over its pgwire (`csvb_engine/src/lib.rs:22`)
     val (c1, out1, err1) = psql("-c", "SHOW TABLES")
     assert(c1 === 0, err1)
@@ -411,6 +411,61 @@ class PgWireSpec extends SparkSpec {
     val (c2, out2, err2) = psql("-c", "\\dn")
     assert(c2 === 0, err2)
     assert(out2.contains("public"), out2)
+  }
+
+  test("psql \\dt / \\dv: a permanent view lists as a view, a permanent table as a table") {
+    val (c0, o0, e0) = psql("-c", "CREATE VIEW pgcat_pv AS SELECT n_name FROM nation_pg")
+    assert(c0 === 0, s"stdout=$o0 stderr=$e0")
+    try {
+      val (c1, dt, e1) = psql("-c", "\\dt")
+      assert(c1 === 0, e1)
+      assert(dt.linesIterator.contains("public|nation_pg|table|graft"), dt)
+      assert(!dt.contains("pgcat_pv"), dt)
+      val (c2, dv, e2) = psql("-c", "\\dv")
+      assert(c2 === 0, e2)
+      assert(dv.linesIterator.contains("public|pgcat_pv|view|graft"), dv)
+      assert(!dv.contains("nation_pg"), dv)
+    } finally psql("-c", "DROP VIEW IF EXISTS pgcat_pv")
+  }
+
+  /** Spark jobs that pgwire connections (job groups `pgwire-…`)
+    * submit while `f` runs.
+    */
+  private def pgwireJobs(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sentinel = s"catalog-spec-sentinel-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == sentinel) sentinelSeen.countDown()
+          else if (g.startsWith("pgwire-")) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      // the listener bus delivers in order: once the sentinel job's
+      // start arrives, every job submitted during f has been counted
+      sc.setJobGroup(sentinel, "job-count sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("psql \\dt and \\d <table> submit no Spark job") {
+    Seq("\\dt" -> "nation_pg", "\\d nation_pg" -> "n_nationkey")
+      .foreach { case (stmt, expected) =>
+        var res: (Int, String, String) = null
+        val jobs = pgwireJobs { res = psql("-c", stmt) }
+        val (code, out, err) = res
+        assert(code === 0, s"$stmt: stdout=$out stderr=$err")
+        assert(out.contains(expected), s"$stmt: $out")
+        assert(jobs === 0, s"$stmt submitted $jobs Spark jobs")
+      }
   }
 
   // ---- extended protocol (psql never sends it; a raw client does) --
@@ -802,6 +857,71 @@ class PgWireSpec extends SparkSpec {
       drainUntil('Z')
       out.write(frame('X', Array.empty)); out.flush()
     } finally sock.close()
+  }
+
+  /** psql 15's literal `\dt` query. */
+  private val PsqlDt =
+    """SELECT n.nspname as "Schema",
+      |  c.relname as "Name",
+      |  CASE c.relkind WHEN 'r' THEN 'table' WHEN 'v' THEN 'view' WHEN 'm' THEN 'materialized view' WHEN 'i' THEN 'index' WHEN 'S' THEN 'sequence' WHEN 't' THEN 'TOAST table' WHEN 'f' THEN 'foreign table' WHEN 'p' THEN 'partitioned table' WHEN 'I' THEN 'partitioned index' END as "Type",
+      |  pg_catalog.pg_get_userbyid(c.relowner) as "Owner"
+      |FROM pg_catalog.pg_class c
+      |     LEFT JOIN pg_catalog.pg_namespace n ON n.oid = c.relnamespace
+      |     LEFT JOIN pg_catalog.pg_am am ON am.oid = c.relam
+      |WHERE c.relkind IN ('r','p','')
+      |      AND n.nspname <> 'pg_catalog'
+      |      AND n.nspname !~ '^pg_toast'
+      |      AND n.nspname <> 'information_schema'
+      |  AND pg_catalog.pg_table_is_visible(c.oid)
+      |ORDER BY 1,2;""".stripMargin
+
+  test("extended protocol: a prepared \\dt describes from the catalog shim and resumes after the row cap") {
+    Serve.registerShared(spark, "region_pg", Seq(s"$Sf/region.parquet"), "parquet")
+    val (sock, out, readMsg, drainUntil) = extSession()
+    try {
+      def rowNames(msgs: Seq[(Char, Array[Byte])]): Seq[String] =
+        msgs.filter(_._1 == 'D').map(m => dataCols(m._2)(1).map(new String(_, UTF_8)).orNull)
+      def readUntil(stop: Set[Char]): Seq[(Char, Array[Byte])] = {
+        val seen = scala.collection.mutable.ListBuffer(readMsg())
+        while (!stop(seen.last._1)) seen += readMsg()
+        seen.toSeq
+      }
+      def fieldNames(rowDesc: Array[Byte]): Seq[String] = {
+        val n = ((rowDesc(0) & 0xff) << 8) | (rowDesc(1) & 0xff)
+        var off = 2
+        (0 until n).map { _ =>
+          var end = off
+          while (rowDesc(end) != 0) end += 1
+          val name = new String(rowDesc, off, end - off, UTF_8)
+          off = end + 1 + 18 // table oid, attnum, type oid, typlen, typmod, format
+          name
+        }
+      }
+      out.write(frame('P', parseMsg("dt", PsqlDt)))
+      out.write(frame('D', 'S'.toByte +: cstr("dt")))
+      out.write(frame('B', bindMsg("", "dt", Seq.empty)))
+      out.write(frame('D', 'P'.toByte +: cstr("")))
+      out.write(frame('E', cstr("") ++ int32(1)))
+      out.write(frame('H', Array.empty)); out.flush()
+      val first = readUntil(Set('s', 'C', 'E'))
+      assert(first.map(_._1) === Seq('1', 't', 'T', '2', 'T', 'D', 's'), first.map(_._1))
+      first.filter(_._1 == 'T').foreach(t =>
+        assert(fieldNames(t._2) === Seq("Schema", "Name", "Type", "Owner")))
+      // the uncapped Execute continues the same iterator to the end
+      out.write(frame('E', cstr("") ++ int32(0)))
+      out.write(frame('S', Array.empty)); out.flush()
+      val rest = drainUntil('Z')
+      assert(rest.map(_._1).takeRight(2) === Seq('C', 'Z'), rest.map(_._1))
+      val names = rowNames(first) ++ rowNames(rest)
+      assert(names === names.sorted, names)
+      assert(names.contains("nation_pg") && names.contains("region_pg"), names)
+      val tag = new String(rest.find(_._1 == 'C').get._2, UTF_8).takeWhile(_ != 0.toChar)
+      assert(tag === s"SELECT ${names.size - 1}", tag)
+      out.write(frame('X', Array.empty)); out.flush()
+    } finally {
+      sock.close()
+      spark.sql("DROP TABLE IF EXISTS region_pg")
+    }
   }
 
   // ---- binary RESULT format (Bind's trailing format-code section) --
