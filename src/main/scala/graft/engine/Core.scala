@@ -380,6 +380,56 @@ object Core {
   private val InfoSchemaRef = java.util.regex.Pattern.compile(
     "(?i)information_schema\\s*\\.\\s*(tables|columns)")
 
+  /** The table names a query statement reads, lower-cased (the last
+    * part of each multi-part name), so a front end can register only
+    * those of its sources. `None` means "cannot tell: register every
+    * source": the statement does not parse, is a command rather than
+    * a query (SHOW TABLES, DESCRIBE, INSERT, CTAS, EXPLAIN, …), names
+    * a table through `IDENTIFIER(...)` or a string (`EXECUTE
+    * IMMEDIATE`), or reads information_schema,
+    * which lists every table. `COPY … TO` and `EXPLAIN ANALYZE`, which
+    * Spark cannot parse, answer for the query they wrap.
+    *
+    * The walk covers the plan, its subquery expressions and each
+    * node's `innerChildren`, where the parser keeps CTE bodies. It may
+    * over-include (a CTE named like a table adds that table), never
+    * under-include.
+    */
+  def tablesNamed(spark: SparkSession, sql: String): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{PlanWithUnresolvedIdentifier,
+      UnresolvedExecuteImmediate, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement}
+    def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
+    parseCopyTo(sql) match {
+      case Some((Left(query), _, _, _)) => tablesNamed(spark, query)
+      case Some((Right(table), _, _, _)) => Some(Set(lower(table.split('.').last)))
+      case None => parseExplainAnalyze(sql) match {
+        case Some(inner) => tablesNamed(spark, inner)
+        case None if InfoSchemaRef.matcher(sql).find() => None
+        case None =>
+          scala.util.Try(spark.sessionState.sqlParser.parsePlan(sql)).toOption.flatMap { plan =>
+            val names = Set.newBuilder[String]
+            var opaque = false
+            def walk(p: LogicalPlan): Unit = p.foreachWithSubqueries { node =>
+              node match {
+                case r: UnresolvedRelation => names += lower(r.multipartIdentifier.last)
+                case _: PlanWithUnresolvedIdentifier | _: UnresolvedExecuteImmediate |
+                    _: Command | _: ParsedStatement =>
+                  opaque = true
+                case _ =>
+              }
+              node.innerChildren.foreach {
+                case c: LogicalPlan => walk(c)
+                case _ =>
+              }
+            }
+            walk(plan)
+            if (opaque) None else Some(names.result())
+          }
+      }
+    }
+  }
+
   /** `information_schema.tables` / `.columns` as REAL queryable
     * tables — the reference enables DataFusion's information_schema
     * (`csvb_engine/src/lib.rs:22`), so `SELECT … FROM
@@ -413,7 +463,7 @@ object Core {
       try spark.table(t.name).schema.fields.zipWithIndex.toSeq.map { case (f, i) =>
         Row("spark_catalog", schema, t.name, f.name, (i + 1).toLong,
           f.dataType.catalogString, if (f.nullable) "YES" else "NO")
-      } catch { case _: Throwable => Seq.empty[Row] } // unresolvable view: skip, don't fail
+      } catch { case scala.util.control.NonFatal(_) => Seq.empty[Row] } // unresolvable view: skip, don't fail
     }
     def save(rows: Seq[Row], schema: StructType, name: String): Unit = {
       // a previous PROCESS' managed-table files can survive in the

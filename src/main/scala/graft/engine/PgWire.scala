@@ -355,6 +355,10 @@ object PgWire {
     var extFailed = false
     def extError(out: DataOutputStream, message: String): Unit = {
       writeError(out, message)
+      // flushed as sent, as PostgreSQL's send_message_to_frontend does:
+      // the discard below drops a Flush ('H') too, so a client that
+      // pipelined Execute + Flush and waits would never see the error
+      out.flush()
       extFailed = true
     }
 

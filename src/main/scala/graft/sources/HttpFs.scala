@@ -86,7 +86,7 @@ final class GraftHttpFileSystem extends FileSystem {
       catch {
         case e: FileNotFoundException => throw e
         case e: java.io.IOException => throw e
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           throw new java.io.IOException(s"$url: ${e.getMessage}", e)
       }
     // block size feeds the split math; 32 MiB keeps remote splits

@@ -137,6 +137,67 @@ class CliSpec extends SparkSpec {
       l.contains("Exchange") && l.contains("shuffleRecordsWritten=")), o2)
   }
 
+  test("exec and publish register only the bindings the statement names, or all when it cannot tell") {
+    val dir = Files.createTempDirectory("graft-cli-named")
+    Files.writeString(dir.resolve("good.csv"), "k,v\n1,a\n2,b\n3,c\n")
+    Files.writeString(dir.resolve("other.csv"), "k\n2\n3\n")
+    val good = s"$dir/good.csv"
+    val other = s"$dir/other.csv"
+    val bad = "/no/such/dir"
+    // each row binds fresh names: temp views outlive one Cli.run in the
+    // shared session. A `bad_*` binding fails the exec if registered.
+    val cases = Seq(
+      ("unreferenced bad path",
+        Seq(s"good_a=$good", s"unused_a=$other", s"bad_a=$bad"),
+        "SELECT count(*) AS n FROM good_a", Seq("| 3 |")),
+      ("CTE body is the only reader",
+        Seq(s"good_b=$good", s"bad_b=$bad"),
+        "WITH x AS (SELECT * FROM good_b) SELECT count(*) AS n FROM x", Seq("| 3 |")),
+      ("IN subquery",
+        Seq(s"good_c=$good", s"other_c=$other", s"bad_c=$bad"),
+        "SELECT count(*) AS n FROM good_c WHERE k IN (SELECT k FROM other_c)", Seq("| 2 |")),
+      ("scalar subquery",
+        Seq(s"other_c2=$other", s"bad_c2=$bad"),
+        "SELECT (SELECT max(k) FROM other_c2) AS n", Seq("| 3 |")),
+      ("SHOW TABLES lists every binding",
+        Seq(s"good_d=$good", s"other_d=$other"), "SHOW TABLES", Seq("good_d", "other_d")),
+      ("information_schema lists every binding",
+        Seq(s"good_d2=$good", s"other_d2=$other"),
+        "SELECT table_name FROM information_schema.tables WHERE table_name LIKE '%_d2'",
+        Seq("good_d2", "other_d2")),
+      ("IDENTIFIER clause",
+        Seq(s"good_e=$good", s"other_e=$other"),
+        "SELECT count(*) AS n FROM IDENTIFIER('good_e')", Seq("| 3 |")),
+      ("COPY TO",
+        Seq(s"good_e2=$good", s"bad_e2=$bad"),
+        s"COPY (SELECT * FROM good_e2) TO '$dir/copied' (FORMAT csv)", Seq.empty))
+    for ((label, bindings, sql, want) <- cases) {
+      val (code, out) = capture("exec" +: bindings.flatMap(b => Seq("--csv", b)) :+ sql: _*)
+      assert(code === 0, s"$label: $out")
+      want.foreach(w => assert(out.contains(w), s"$label: $out"))
+    }
+    assert(!spark.catalog.tableExists("unused_a") && !spark.catalog.tableExists("bad_a"))
+    assert(spark.read.option("header", "true").csv(s"$dir/copied").count() === 3L)
+    // where every binding registers, a bad path still fails the exec
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      capture("exec", "--csv", s"good_g=$good", "--csv", s"bad_g=$bad", "SHOW TABLES"))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    // publish's default `SELECT * FROM <tbl>` names <tbl>
+    val sinkDir = Files.createTempDirectory("graft-cli-named-sink")
+    spark.sql(s"CREATE TABLE named_sink (k INT, v STRING) USING parquet LOCATION '$sinkDir'")
+    val srv = graft.engine.PgWire.start(spark, 0)
+    try {
+      val (code, out) = capture("publish", "--pg", s"127.0.0.1:${srv.boundPort}",
+        "--dbtable", "named_sink", "--csv", good, "--table-name", "good_f", "--csv", s"bad_f=$bad")
+      assert(code === 0, out)
+      assert(out.contains("published 3 rows"), out)
+      assert(spark.table("named_sink").count() === 3L)
+    } finally {
+      srv.close()
+      spark.sql("DROP TABLE IF EXISTS named_sink")
+    }
+  }
+
   test("haiku prints the easter egg") {
     val (code, out) = capture("haiku")
     assert(code === 0)

@@ -277,6 +277,37 @@ class CoreSpec extends SparkSpec {
       "WITH c AS (SELECT 'a\\'b' AS s) SELECT * FROM c") === None)
   }
 
+  test("tablesNamed: CTE bodies, subqueries and COPY/EXPLAIN ANALYZE inners; None for what it cannot tell") {
+    val cases = Seq(
+      "SELECT * FROM a JOIN B USING (k)" -> Some(Set("a", "b")),
+      "SELECT * FROM db.T" -> Some(Set("t")),
+      // the CTE body lives in UnresolvedWith.innerChildren
+      "WITH x AS (SELECT * FROM lineitem) SELECT * FROM x" -> Some(Set("lineitem", "x")),
+      "WITH x AS (WITH y AS (SELECT * FROM a) SELECT * FROM y) SELECT * FROM x" ->
+        Some(Set("a", "x", "y")),
+      "SELECT * FROM a WHERE k IN (SELECT k FROM b)" -> Some(Set("a", "b")),
+      "SELECT (SELECT max(k) FROM b) AS m" -> Some(Set("b")),
+      "SELECT * FROM a WHERE EXISTS (WITH c AS (SELECT * FROM b) SELECT 1 FROM c)" ->
+        Some(Set("a", "b", "c")),
+      "SELECT * FROM a, LATERAL (SELECT * FROM b WHERE b.k = a.k)" -> Some(Set("a", "b")),
+      "VALUES (1)" -> Some(Set.empty[String]),
+      "COPY (SELECT * FROM a JOIN b USING (k)) TO '/x' (FORMAT csv)" -> Some(Set("a", "b")),
+      "EXPLAIN ANALYZE SELECT count(*) FROM a" -> Some(Set("a")),
+      // cannot tell: register every source
+      "SELECT * FROM IDENTIFIER('a')" -> None,
+      "EXECUTE IMMEDIATE 'SELECT * FROM a'" -> None,
+      "BEGIN SELECT * FROM a; END" -> None,
+      "SELECT * FROM information_schema.tables" -> None,
+      "SHOW TABLES" -> None,
+      "DESCRIBE a" -> None,
+      "EXPLAIN SELECT * FROM a" -> None,
+      "INSERT INTO t SELECT * FROM a" -> None,
+      "WITH x AS (SELECT * FROM a) INSERT INTO t SELECT * FROM x" -> None,
+      "CREATE TABLE t AS SELECT * FROM a" -> None,
+      "SELEC nonsense" -> None)
+    for ((sql, want) <- cases) assert(Core.tablesNamed(spark, sql) === want, sql)
+  }
+
   test("pretty renders a bounded aligned table") {
     Core.addParquetTable(spark, "t_nation", Seq(s"$Sf/nation.parquet"))
     val s = Core.pretty(Core.execute(spark, "SELECT n_name FROM t_nation ORDER BY n_name LIMIT 2"))

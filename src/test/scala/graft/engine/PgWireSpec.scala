@@ -924,6 +924,31 @@ class PgWireSpec extends SparkSpec {
     }
   }
 
+  test("extended protocol: an ErrorResponse is flushed as sent, before any Sync") {
+    val (sock, out, readMsg, drainUntil) = extSession()
+    try {
+      // binary parameter without a declared oid: the Bind fails
+      out.write(frame('P', parseMsg("ef",
+        "SELECT n_name FROM nation_pg WHERE n_nationkey = $1")))
+      out.write(frame('B', bindMsgRaw("", "ef", Seq(Some(int32(7))), fmts = Seq(1))))
+      out.write(frame('E', cstr("") ++ int32(1)))
+      out.write(frame('H', Array.empty)); out.flush()
+      // the row-cap flow waits here for a reply: it must be the error,
+      // well inside the 30 s socket timeout
+      sock.setSoTimeout(5000)
+      assert(Seq(readMsg()._1, readMsg()._1) === Seq('1', 'E'))
+      // the discarded Execute and Flush draw nothing; Sync recovers
+      sock.setSoTimeout(30000)
+      out.write(frame('S', Array.empty)); out.flush()
+      assert(drainUntil('Z').map(_._1) === Seq('Z'))
+      out.write(frame('B', bindMsg("", "ef", Seq(Some("7")))))
+      out.write(frame('E', cstr("") ++ int32(0)))
+      out.write(frame('S', Array.empty)); out.flush()
+      assert(dataVals(drainUntil('Z')) === Seq("NATION_7"))
+      out.write(frame('X', Array.empty)); out.flush()
+    } finally sock.close()
+  }
+
   // ---- binary RESULT format (Bind's trailing format-code section) --
 
   /** Bind body with no params and explicit RESULT format codes. */
