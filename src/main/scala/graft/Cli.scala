@@ -2,7 +2,7 @@ package graft
 
 import java.io.PrintStream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.engine.Core
 
@@ -61,11 +61,11 @@ object Cli {
       |table), so one exec can join many sources — the multi-table
       |binding the reference leaves as a TODO (csvb.rs:42-43).
       |exec and publish register (and schema-infer) only the tables the
-      |statement names, two or more at once; the path of a binding the
-      |statement does not read is not checked. Every binding registers
-      |when that cannot be told: the statement does not parse, is a
-      |command (SHOW TABLES, DESCRIBE, INSERT, ...), uses IDENTIFIER(...)
-      |or EXECUTE IMMEDIATE, or reads information_schema.
+      |statement names; the path of a binding the statement does not
+      |read is not checked. Every binding registers when that cannot be
+      |told: the statement does not parse (COPY ... TO, EXPLAIN ANALYZE),
+      |is a command (SHOW TABLES, DESCRIBE, INSERT, ...), uses
+      |IDENTIFIER(...) or EXECUTE IMMEDIATE, or reads information_schema.
       |--analyze prints, after the result, per-operator runtime
       |metrics from the executed plan (files read post-pruning, rows
       |scanned, shuffle bytes/records, spill) — the EXPLAIN ANALYZE
@@ -206,50 +206,24 @@ object Cli {
     *
     * Only the bindings `sql` names are registered, each with its full
     * schema inference ([[Core.tablesNamed]]); where that cannot tell
-    * (a command, `IDENTIFIER(...)`, `EXECUTE IMMEDIATE`,
-    * information_schema, an unparsable statement) every binding is. So the path of a binding the
-    * statement does not read is never checked. Two or more
-    * registrations infer concurrently, one driver thread each, and all
-    * have finished before this returns; the first failure (in binding
-    * order) is rethrown.
+    * (an unparsable statement such as `COPY … TO` or `EXPLAIN
+    * ANALYZE`, a command, `IDENTIFIER(...)`, `EXECUTE IMMEDIATE`,
+    * information_schema) every binding is. So the path of a binding
+    * the statement does not read is never checked.
     */
   private def registerSources(spark: SparkSession, sql: String, tableName: String,
       csvs: Vector[String], parquets: Vector[String],
       namedCsvs: Vector[(String, String)],
       namedParquets: Vector[(String, String)]): Unit = {
+    val named = Core.tablesNamed(spark, sql)
+    def wanted(n: String) = named.forall(_(n.toLowerCase(java.util.Locale.ROOT)))
+    if (csvs.nonEmpty && wanted(tableName)) Core.addCsvTable(spark, tableName, csvs)
     val pqName = if (csvs.nonEmpty) s"${tableName}_pq" else tableName
-    val bindings: Seq[(String, () => DataFrame)] =
-      Option.when(csvs.nonEmpty)(tableName -> (() => Core.addCsvTable(spark, tableName, csvs))).toSeq ++
-        Option.when(parquets.nonEmpty)(pqName -> (() => Core.addParquetTable(spark, pqName, parquets))) ++
-        namedCsvs.groupBy(_._1).map { case (n, ps) =>
-          n -> (() => Core.addCsvTable(spark, n, ps.map(_._2))) } ++
-        namedParquets.groupBy(_._1).map { case (n, ps) =>
-          n -> (() => Core.addParquetTable(spark, n, ps.map(_._2))) }
-    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    // a later binding of the same name replaced an earlier one when
-    // they registered in sequence; keep only the one that wins
-    val last = bindings.reverse.distinctBy(b => key(b._1)).reverse
-    val wanted = Core.tablesNamed(spark, sql) match {
-      case Some(names) => last.filter(b => names(key(b._1)))
-      case None        => last
-    }
-    if (wanted.size < 2) wanted.foreach(_._2())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(wanted.size)
-      try {
-        val done = wanted.map { case (_, register) =>
-          pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            def call(): DataFrame = {
-              // SQLConf.get inside the CSV reader reads the active session
-              SparkSession.setActiveSession(spark)
-              register()
-            }
-          })
-        }.map(f => scala.util.Try(f.get()))
-        done.collectFirst { case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
-          throw e.getCause }
-      } finally pool.shutdown()
-    }
+    if (parquets.nonEmpty && wanted(pqName)) Core.addParquetTable(spark, pqName, parquets)
+    namedCsvs.groupBy(_._1).foreach { case (n, ps) =>
+      if (wanted(n)) Core.addCsvTable(spark, n, ps.map(_._2)) }
+    namedParquets.groupBy(_._1).foreach { case (n, ps) =>
+      if (wanted(n)) Core.addParquetTable(spark, n, ps.map(_._2)) }
   }
 
   /** `host:port` flag value, shared by federate's and publish's --pg. */

@@ -383,12 +383,11 @@ object Core {
   /** The table names a query statement reads, lower-cased (the last
     * part of each multi-part name), so a front end can register only
     * those of its sources. `None` means "cannot tell: register every
-    * source": the statement does not parse, is a command rather than
-    * a query (SHOW TABLES, DESCRIBE, INSERT, CTAS, EXPLAIN, …), names
-    * a table through `IDENTIFIER(...)` or a string (`EXECUTE
-    * IMMEDIATE`), or reads information_schema,
-    * which lists every table. `COPY … TO` and `EXPLAIN ANALYZE`, which
-    * Spark cannot parse, answer for the query they wrap.
+    * source": the statement does not parse (`COPY … TO`, `EXPLAIN
+    * ANALYZE`), is a command rather than a query (SHOW TABLES,
+    * DESCRIBE, INSERT, CTAS, EXPLAIN, …), names a table through
+    * `IDENTIFIER(...)` or a string (`EXECUTE IMMEDIATE`), or reads
+    * information_schema, which lists every table.
     *
     * The walk covers the plan, its subquery expressions and each
     * node's `innerChildren`, where the parser keeps CTE bodies. It may
@@ -400,33 +399,25 @@ object Core {
       UnresolvedExecuteImmediate, UnresolvedRelation}
     import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan, ParsedStatement}
     def lower(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    parseCopyTo(sql) match {
-      case Some((Left(query), _, _, _)) => tablesNamed(spark, query)
-      case Some((Right(table), _, _, _)) => Some(Set(lower(table.split('.').last)))
-      case None => parseExplainAnalyze(sql) match {
-        case Some(inner) => tablesNamed(spark, inner)
-        case None if InfoSchemaRef.matcher(sql).find() => None
-        case None =>
-          scala.util.Try(spark.sessionState.sqlParser.parsePlan(sql)).toOption.flatMap { plan =>
-            val names = Set.newBuilder[String]
-            var opaque = false
-            def walk(p: LogicalPlan): Unit = p.foreachWithSubqueries { node =>
-              node match {
-                case r: UnresolvedRelation => names += lower(r.multipartIdentifier.last)
-                case _: PlanWithUnresolvedIdentifier | _: UnresolvedExecuteImmediate |
-                    _: Command | _: ParsedStatement =>
-                  opaque = true
-                case _ =>
-              }
-              node.innerChildren.foreach {
-                case c: LogicalPlan => walk(c)
-                case _ =>
-              }
-            }
-            walk(plan)
-            if (opaque) None else Some(names.result())
-          }
+    if (InfoSchemaRef.matcher(sql).find()) None
+    else scala.util.Try(spark.sessionState.sqlParser.parsePlan(sql)).toOption.flatMap { plan =>
+      val names = Set.newBuilder[String]
+      var opaque = false
+      def walk(p: LogicalPlan): Unit = p.foreachWithSubqueries { node =>
+        node match {
+          case r: UnresolvedRelation => names += lower(r.multipartIdentifier.last)
+          case _: PlanWithUnresolvedIdentifier | _: UnresolvedExecuteImmediate |
+              _: Command | _: ParsedStatement =>
+            opaque = true
+          case _ =>
+        }
+        node.innerChildren.foreach {
+          case c: LogicalPlan => walk(c)
+          case _ =>
+        }
       }
+      walk(plan)
+      if (opaque) None else Some(names.result())
     }
   }
 

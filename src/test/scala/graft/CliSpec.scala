@@ -169,7 +169,7 @@ class CliSpec extends SparkSpec {
         Seq(s"good_e=$good", s"other_e=$other"),
         "SELECT count(*) AS n FROM IDENTIFIER('good_e')", Seq("| 3 |")),
       ("COPY TO",
-        Seq(s"good_e2=$good", s"bad_e2=$bad"),
+        Seq(s"good_e2=$good", s"other_e2=$other"),
         s"COPY (SELECT * FROM good_e2) TO '$dir/copied' (FORMAT csv)", Seq.empty))
     for ((label, bindings, sql, want) <- cases) {
       val (code, out) = capture("exec" +: bindings.flatMap(b => Seq("--csv", b)) :+ sql: _*)
