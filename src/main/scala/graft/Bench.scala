@@ -140,21 +140,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val extraIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA", "2").toInt
     val slowN = sys.env.getOrElse("SPARK_GRAFT_BENCH_SLOW_N", "20").toInt
     val benchT0 = System.nanoTime()
     val canaryStart = canarySec()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep wide aggregates (128-col minhash) in whole-stage codegen
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Core.session("graft-bench")
     // dev-loop subset filter (driver sets nothing → full sweep)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

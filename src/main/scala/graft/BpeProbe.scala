@@ -44,13 +44,7 @@ object BpeProbe {
     val nMerges = args.lift(1).map(_.toInt).getOrElse(256)
     val batches = args.lift(2).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 32, 128))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Core.session("graft-bpe-probe", cpus.toInt)
 
     val docs = syntheticCorpus(spark, nTokens)
     docs.write.format("noop").mode("overwrite").save() // warm the JVM

@@ -60,6 +60,11 @@ object Cli {
       |(repeatable; several paths under one name union as a listing
       |table), so one exec can join many sources — the multi-table
       |binding the reference leaves as a TODO (csvb.rs:42-43).
+      |A path may be an http(s) URL, read through ranged GETs. CSV
+      |directories read only their *.csv files; that filter is off when
+      |every path of a binding is a URL (a URL names one object, so an
+      |extensionless or ?query URL still reads), and on when a binding
+      |mixes local paths and URLs.
       |exec and publish register (and schema-infer) only the tables the
       |statement names; the path of a binding the statement does not
       |read is not checked. Every binding registers when that cannot be

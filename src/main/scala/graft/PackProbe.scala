@@ -19,13 +19,7 @@ object PackProbe {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val buckets = args.lift(1).map(_.toInt).getOrElse(64)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Core.session("graft-pack-probe", cpus.toInt)
 
     // one (lang, source) stratum; deterministic short texts and a
     // near-continuous quality column

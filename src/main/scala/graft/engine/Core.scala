@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.HttpFs
+
 /** Session + catalog glue — the Spark-native analog of the reference
   * engine core (see `/root/reference/csvb_engine/src/lib.rs:13-31`:
   * session construction with information_schema + a greedy memory
@@ -38,14 +40,6 @@ object Core {
 
   def defaultCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** Register N CSV files/dirs as ONE named table — the reference's
-    * multi-path "listing table" (`csvb_engine/src/lib.rs:33-85`):
-    * schema inferred once, then pinned for every path; files
-    * discovered by `.csv` extension. Spark's reader already unions
-    * multiple paths under one scan with partition-parallel reads, so
-    * this is a single declarative scan Catalyst can push filters and
-    * projections into.
-    */
   /** Inference-time timestamp shape: date-anchored forms only (space
     * or `T` separator, optional seconds, optional fraction, optional
     * zone offset with or without colon). The point is what it
@@ -77,77 +71,49 @@ object Core {
   private val CsvTimestampPattern =
     "yyyy-MM-dd[ ]['T']HH:mm[:ss[.SSSSSS]][XXX][XX]"
 
-  def addCsvTable(
-      spark: SparkSession,
-      name: String,
-      paths: Seq[String],
-      header: Boolean = true,
-      inferSchema: Boolean = true): DataFrame = {
+  /** The one CSV read contract, shared by [[addCsvTable]] and
+    * `Serve.registerShared`'s `CREATE TABLE … OPTIONS`: header +
+    * schema inference over every file, [[CsvTimestampPattern]] with
+    * the lenient fallback off, and the reference's `.csv` extension
+    * filter for directories — except when every path is an http(s)
+    * URL, which names one object ([[graft.sources.GraftHttpFileSystem]]
+    * has no listing), so the filter could only drop an extensionless
+    * or query-string URL. A binding that mixes local paths and URLs
+    * keeps the filter, as the reference does.
+    */
+  private[engine] def csvOptions(paths: Seq[String]): Map[String, String] = {
+    val opts = Map(
+      "header" -> "true",
+      "inferSchema" -> "true",
+      "timestampFormat" -> CsvTimestampPattern,
+      "enableDateTimeParsingFallback" -> "false")
+    if (paths.forall(HttpFs.isHttp)) opts else opts + ("pathGlobFilter" -> "*.csv")
+  }
+
+  /** Register N CSV files/dirs/URLs as ONE named table — the
+    * reference's multi-path "listing table"
+    * (`csvb_engine/src/lib.rs:33-85`) read under [[csvOptions]].
+    * Spark's reader unions the paths under one scan with
+    * split-parallel reads, so Catalyst can push filters and
+    * projections into it. The schema is inferred over all files (a
+    * superset of the reference's infer-from-the-first-path, pinned by
+    * CoreSpec). http(s) paths read through the ranged HTTP
+    * FileSystem; two or more URLs first have their header lines
+    * compared ([[HttpFs.requireSameCsvHeader]]).
+    */
+  def addCsvTable(spark: SparkSession, name: String, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "No sources provided")
-    val local = paths.map(materializeIfHttp)
-    val df = spark.read
-      .option("header", header.toString)
-      .option("inferSchema", inferSchema.toString)
-      // match the reference's `.csv` extension filter for directories
-      .option("pathGlobFilter", "*.csv")
-      // kill the current-date anchoring of bare-time columns — see
-      // CsvTimestampPattern
-      .option("timestampFormat", CsvTimestampPattern)
-      .option("enableDateTimeParsingFallback", "false")
-      .csv(local: _*)
+    HttpFs.registerIfHttp(spark, paths)
+    HttpFs.requireSameCsvHeader(name, paths)
+    val df = spark.read.options(csvOptions(paths)).csv(paths: _*)
     df.createOrReplaceTempView(name)
     df
   }
-
-  /** Exact reference schema semantics: infer from the FIRST path
-    * only, then pin that schema on every path
-    * (`csvb_engine/src/lib.rs:73-80` — `infer_schema(&table_paths[0])`
-    * then fixed on the ListingTableConfig). Spark's default
-    * `inferSchema` samples all files (a superset behavior —
-    * [[addCsvTable]]); this variant reproduces the reference's
-    * pin-from-first contract, which also bounds inference cost to one
-    * file at any corpus size.
-    */
-  def addCsvTableFirstFileSchema(
-      spark: SparkSession,
-      name: String,
-      paths: Seq[String],
-      header: Boolean = true): DataFrame = {
-    require(paths.nonEmpty, "No sources provided")
-    val local = paths.map(materializeIfHttp)
-    val pinned = spark.read
-      .option("header", header.toString)
-      .option("inferSchema", "true")
-      .option("pathGlobFilter", "*.csv")
-      .option("timestampFormat", CsvTimestampPattern)
-      .option("enableDateTimeParsingFallback", "false")
-      .csv(local.head)
-      .schema
-    val df = spark.read
-      .option("header", header.toString)
-      .option("pathGlobFilter", "*.csv")
-      .option("timestampFormat", CsvTimestampPattern)
-      .option("enableDateTimeParsingFallback", "false")
-      .schema(pinned)
-      .csv(local: _*)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** Any http(s) path ⇒ wire the ranged HTTP FileSystem first — the
-    * reference registers its HTTP object store per url scheme at
-    * registration time (`csvb_engine/src/lib.rs:54-71`); same posture
-    * here, so `exec --parquet http://…` just works, scanned natively
-    * with pushdown (no driver spool — contrast the csv
-    * materializeIfHttp legacy shim).
-    */
-  private def registerHttpFsIfNeeded(spark: SparkSession, paths: Seq[String]): Unit =
-    graft.sources.HttpFs.registerIfHttp(spark, paths)
 
   /** Register one-or-more parquet paths as a named table. */
   def addParquetTable(spark: SparkSession, name: String, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "No sources provided")
-    registerHttpFsIfNeeded(spark, paths)
+    HttpFs.registerIfHttp(spark, paths)
     val df = spark.read.parquet(paths: _*)
     df.createOrReplaceTempView(name)
     df
@@ -158,7 +124,7 @@ object Core {
     */
   def addJsonTable(spark: SparkSession, name: String, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "No sources provided")
-    registerHttpFsIfNeeded(spark, paths)
+    HttpFs.registerIfHttp(spark, paths)
     val df = spark.read.json(paths: _*)
     df.createOrReplaceTempView(name)
     df
@@ -169,30 +135,11 @@ object Core {
     */
   def addOrcTable(spark: SparkSession, name: String, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "No sources provided")
-    registerHttpFsIfNeeded(spark, paths)
+    HttpFs.registerIfHttp(spark, paths)
     val df = spark.read.orc(paths: _*)
     df.createOrReplaceTempView(name)
     df
   }
-
-  /** The reference registers an HTTP object store per http(s) base URL
-    * (`csvb_engine/src/lib.rs:54-71`) and range-reads CSV over HTTP.
-    * Spark has no built-in http:// FileSystem; this shim is a one-time
-    * download to a local spool — fine for the CLI's single small file.
-    * The scale path is [[graft.sources.HttpCsv.rangedCsvTable]]:
-    * executors fetch disjoint byte ranges in parallel with `Range:`
-    * headers, no bytes through the driver (HttpCsvSpec drives it
-    * against an in-process 206 server).
-    */
-  private def materializeIfHttp(path: String): String =
-    if (path.startsWith("http://") || path.startsWith("https://")) {
-      val tmp = java.nio.file.Files.createTempFile("graft-http-", ".csv")
-      val out = new java.io.FileOutputStream(tmp.toFile)
-      val in = new java.net.URI(path).toURL.openStream()
-      try in.transferTo(out)
-      finally { in.close(); out.close() }
-      tmp.toString
-    } else path
 
   /** Execute SQL — the single delegation point, mirroring the
     * reference's one-call-site execute (`csvb_engine/src/lib.rs:87-89`
@@ -309,9 +256,6 @@ object Core {
     val m = WriteTargetRe.matcher(afterCtePrefix(sql))
     if (m.find()) Some(m.group(1)) else None
   }
-
-  /** Back-compat alias of [[writeTarget]]. */
-  def insertTarget(sql: String): Option[String] = writeTarget(sql)
 
   def execute(spark: SparkSession, sql: String): DataFrame =
     parseCopyTo(sql) match {

@@ -67,13 +67,6 @@ object Federation {
   private def compatKey(df: DataFrame): Seq[(String, String)] =
     df.schema.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType.sql)).sorted
 
-  /** Register the union as a temp view (the federated-table name). */
-  def addFederatedTable(spark: SparkSession, name: String, shards: Seq[DataFrame]): DataFrame = {
-    val df = unionShards(shards)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
   /** JDBC-backed shards — the reference's live-Postgres path
     * (`third_party/postgres_provider`). Partitioned reads per shard:
     * `numPartitions`/`partitionColumn` bounds map 1:1 to the

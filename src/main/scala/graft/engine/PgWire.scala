@@ -614,7 +614,7 @@ object PgWire {
         // connections' already-cached relations, same as COPY IN
         // (parameterized extended-protocol INSERTs take the
         // session.sql path and rely on fresh-session listing)
-        Core.insertTarget(sql).foreach(refreshSessions)
+        Core.writeTarget(sql).foreach(refreshSessions)
         Result(df)
     }
 

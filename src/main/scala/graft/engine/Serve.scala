@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Remote SQL surface — the Spark-native answer to the reference's
@@ -38,9 +40,8 @@ object Serve {
   /** Register `paths` under `name` so that OTHER sessions of the same
     * SparkContext (i.e. Spark Connect clients) can query it: one
     * external table per path, fronted by a persistent view when the
-    * group has several paths. `format` is `csv` (header +
-    * inferSchema, matching the reference's CSV defaults) or
-    * `parquet`.
+    * group has several paths. `format` is `csv` (read under
+    * [[Core.csvOptions]], the same contract as `exec`) or `parquet`.
     *
     * Validation precedes any catalog mutation (same contract as
     * [[registerSharedJdbc]]): every path is resolved first, so a
@@ -68,7 +69,8 @@ object Serve {
       ()
     }
     val opts = format match {
-      case "csv" => "OPTIONS (header 'true', inferSchema 'true')"
+      case "csv" => Core.csvOptions(paths)
+        .map { case (k, v) => s"$k '${sqlLit(v)}'" }.mkString("OPTIONS (", ", ", ")")
       case _     => ""
     }
     def mkTable(tbl: String, path: String): Unit = {
@@ -88,7 +90,7 @@ object Serve {
         ()
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         created.foreach(dropAnyShape(spark, _))
         throw e
     }
@@ -143,7 +145,7 @@ object Serve {
       created += tbl
       ()
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         created.foreach(dropAnyShape(spark, _))
         throw e
     }

@@ -277,7 +277,7 @@ object Relational4 {
   }
 
   /** One ranged-HTTP server per sfDir per JVM (dir → url), stopped on
-    * exit — the graded counterpart of HttpCsvSpec's in-process 206
+    * exit — the graded counterpart of the HTTP specs' in-process 206
     * server, kept alive for the session so the lazily-evaluated scan
     * (Verify writes parquet, Bench noop-writes AFTER the query
     * returns) can still fetch.
@@ -287,11 +287,11 @@ object Relational4 {
   /** The reference's HTTP object-store CSV scan
     * (`csvb_engine/src/lib.rs:54-71`) as a GRADED surface: `customer`
     * rendered to CSV bytes, served by an in-process server honoring
-    * `Range:`, scanned through [[graft.sources.HttpCsv]] — executors
-    * fetch disjoint byte ranges in parallel (small chunkBytes forces
-    * many ranges so chunk boundaries land mid-line) and the result
-    * must reproduce the source table bit-for-bit, which the oracle
-    * reads from parquet.
+    * `Range:`, and registered through [[graft.engine.Core.addCsvTable]]
+    * — the same CSV read contract as `exec`, over the ranged
+    * [[graft.sources.GraftHttpFileSystem]]. The result must reproduce
+    * the source table bit-for-bit, which the oracle reads from
+    * parquet.
     */
   def httpScan(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -302,16 +302,12 @@ object Relational4 {
       val sb = new StringBuilder("c_custkey,c_name,c_nationkey\n")
       rows.foreach(r => sb.append(r.getLong(0)).append(',').append(r.getString(1))
         .append(',').append(r.getLong(2)).append('\n'))
-      val (server, u) = graft.sources.HttpCsv.serveBytes(
+      val (server, u) = graft.sources.HttpFs.serveBytes(
         sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8), "customer.csv")
       sys.addShutdownHook(server.stop(0))
       u
     })
-    // 16 KiB chunks: multi-range at every SF (sf0.01 CSV ≈ 45 KB → 3
-    // ranges, sf0.1 ≈ 450 KB → ~28) without drowning the scan in
-    // per-request latency; the mid-line-boundary torture coverage
-    // stays in HttpCsvSpec's 4 KiB/5000-line case
-    graft.sources.HttpCsv.rangedCsvTable(s, url, "http_customer", chunkBytes = 16384)
+    graft.engine.Core.addCsvTable(s, "http_customer", Seq(url))
       .select(col("c_custkey").cast("long"), col("c_name"), col("c_nationkey").cast("long"))
       .orderBy("c_custkey")
   }
@@ -343,12 +339,12 @@ object Relational4 {
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/c")
       val f = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/c"))
         .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-      val (server, u) = graft.sources.HttpCsv.serveBytes(
+      val (server, u) = graft.sources.HttpFs.serveBytes(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), "customer.parquet")
       sys.addShutdownHook(server.stop(0))
       u
     })
-    graft.sources.HttpFs.table(s, url, "http_customer_pq", "parquet")
+    graft.engine.Core.addParquetTable(s, "http_customer_pq", Seq(url))
       .filter(col("c_nationkey") < 13)
       .orderBy("c_custkey")
   }
@@ -372,12 +368,12 @@ object Relational4 {
         .collect()
       val sb = new StringBuilder
       rows.foreach(r => sb.append(r.getString(0)).append('\n'))
-      val (server, u) = graft.sources.HttpCsv.serveBytes(
+      val (server, u) = graft.sources.HttpFs.serveBytes(
         sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8), "customer.json")
       sys.addShutdownHook(server.stop(0))
       u
     })
-    graft.sources.HttpFs.table(s, url, "http_customer_json", "json")
+    graft.engine.Core.addJsonTable(s, "http_customer_json", Seq(url))
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
       .filter(col("c_custkey") % 7 === 0)
       .orderBy("c_custkey")
@@ -390,7 +386,7 @@ object Relational4 {
   /** The MULTI-url listing registration generalized past CSV:
     * `customer` split into two parquet shards (c_custkey mod 2), each
     * served by its own in-process 206 server, registered as ONE table
-    * through [[graft.sources.HttpFs.tableMulti]] — Spark plans a
+    * through [[graft.engine.Core.addParquetTable]] — Spark plans a
     * single scan across both remote objects (per-authority FileSystem
     * instances), and the union must reproduce the source table
     * bit-for-bit, which the oracle reads from parquet.
@@ -406,14 +402,14 @@ object Relational4 {
           .coalesce(1).write.mode("overwrite").parquet(s"$tmp/c")
         val f = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/c"))
           .toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-        val (server, u) = graft.sources.HttpCsv.serveBytes(
+        val (server, u) = graft.sources.HttpFs.serveBytes(
           java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)), path)
         sys.addShutdownHook(server.stop(0))
         u
       }
       (shard(0, "customer_even.parquet"), shard(1, "customer_odd.parquet"))
     })
-    graft.sources.HttpFs.tableMulti(s, Seq(urlA, urlB), "http_customer_pq_multi", "parquet")
+    graft.engine.Core.addParquetTable(s, "http_customer_pq_multi", Seq(urlA, urlB))
       .orderBy("c_custkey")
   }
 
@@ -428,9 +424,9 @@ object Relational4 {
     * HTTP paths) as a graded surface: `customer` split into two CSV
     * shards (c_custkey mod 2), each served by its own in-process
     * ranged server, registered as ONE table through
-    * [[graft.sources.HttpCsv.rangedCsvTableMulti]] — schema pinned
-    * from the first shard, header-equality bail applied, both shards
-    * range-scanned in parallel. The union must reproduce the source
+    * [[graft.engine.Core.addCsvTable]] — header-equality bail
+    * applied, schema inferred over both shards, one scan planned
+    * across both remote objects. The union must reproduce the source
     * table bit-for-bit, which the oracle reads from parquet.
     */
   def httpScanMulti(s: SparkSession, dir: String): DataFrame = {
@@ -447,15 +443,14 @@ object Relational4 {
         rows.filter(_.getLong(0) % 2 == parity)
           .foreach(r => sb.append(r.getLong(0)).append(',').append(r.getString(1))
             .append(',').append(r.getLong(2)).append('\n'))
-        val (server, u) = graft.sources.HttpCsv.serveBytes(
+        val (server, u) = graft.sources.HttpFs.serveBytes(
           sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8), path)
         sys.addShutdownHook(server.stop(0))
         u
       }
       (shard(0, "customer_even.csv"), shard(1, "customer_odd.csv"))
     })
-    graft.sources.HttpCsv.rangedCsvTableMulti(
-      s, Seq(urlA, urlB), "http_customer_multi", chunkBytes = 16384)
+    graft.engine.Core.addCsvTable(s, "http_customer_multi", Seq(urlA, urlB))
       .select(col("c_custkey").cast("long"), col("c_name"), col("c_nationkey").cast("long"))
       .orderBy("c_custkey")
   }

@@ -93,7 +93,7 @@ class CliSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/t")
     val f = Files.list(java.nio.file.Paths.get(s"$tmp/t")).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head
-    val (srv, url) = graft.sources.HttpCsv.serveBytes(
+    val (srv, url) = graft.sources.HttpFs.serveBytes(
       Files.readAllBytes(java.nio.file.Paths.get(f)), "cli.parquet")
     try {
       val (code, out) = capture(
@@ -102,6 +102,28 @@ class CliSpec extends SparkSpec {
       assert(code === 0, out)
       assert(out.contains("20"), out)
     } finally srv.stop(0)
+  }
+
+  test("exec --csv http://... reads extensionless, query-string and multi-url bindings") {
+    // tod is a time-of-day column: it must stay a string, as it does
+    // for a local file (no current-date timestamp)
+    def body(ids: Range) =
+      ("id,tod\n" + ids.map(i => s"$i,12:34:0$i\n").mkString).getBytes("UTF-8")
+    val servers = Seq(
+      graft.sources.HttpFs.serveBytes(body(1 to 2), "data"),
+      graft.sources.HttpFs.serveBytes(body(1 to 2), "signed.csv"),
+      graft.sources.HttpFs.serveBytes(body(3 to 5), "more.csv"))
+    val Seq(bare, signed, more) = servers.map(_._2)
+    try Seq(
+      "extensionless url" -> (Seq("--csv", bare), "2:3:string"),
+      "?sig= url" -> (Seq("--csv", s"$signed?sig=abc"), "2:3:string"),
+      "two urls, one binding" -> (Seq("--csv", s"t=$signed", "--csv", s"t=$more"), "5:15:string")
+    ).foreach { case (label, (flags, want)) =>
+      val (code, out) = capture(Seq("exec") ++ flags ++ Seq("--table-name", "t",
+        "SELECT concat_ws(':', count(*), sum(id), typeof(tod)) AS r FROM t GROUP BY typeof(tod)"): _*)
+      assert(code === 0, s"$label: $out")
+      assert(out.contains(want), s"$label: $out")
+    } finally servers.foreach(_._1.stop(0))
   }
 
   test("exec --analyze reports executed-plan metrics on a pruned scan") {
@@ -499,6 +521,17 @@ class CliSpec extends SparkSpec {
     }
     assert(spark.table("vshare").count() === 25)
     assert(!spark.catalog.tableExists("vshare__p0")) // no partial slots
+  }
+
+  test("registerShared reads csv under exec's contract: time-of-day stays a string, non-.csv skipped") {
+    val dir = Files.createTempDirectory("graft-serve-csv")
+    Files.writeString(dir.resolve("w.csv"), "id,tod\n1,12:34:56\n2,23:59:59\n")
+    Files.writeString(dir.resolve("ignored.txt"), "id,tod\n9,01:02:03\n")
+    graft.engine.Serve.registerShared(spark, "csvshare", Seq(dir.toString), "csv")
+    val t = spark.table("csvshare")
+    assert(t.schema("tod").dataType === org.apache.spark.sql.types.StringType)
+    assert(t.count() === 2)
+    assert(spark.sql("SELECT sum(id) FROM csvshare").head().getLong(0) === 3L)
   }
 
   test("serve boots a Spark Connect server; a real client round-trips SQL") {

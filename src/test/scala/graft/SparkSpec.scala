@@ -13,15 +13,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.engine.Core.session("graft-test", cpus = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,18 +1,19 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.engine.Core
 import org.apache.spark.sql.functions._
 
-/** End-to-end test of the distributed HTTP range-read CSV source
-  * against an in-process JDK HttpServer that serves 206 partial
-  * content — the executors' ranged GETs are real HTTP, no egress.
-  * A second server that IGNORES Range (plain 200) covers the
-  * fallback path.
+/** CSV over HTTP: `Core.addCsvTable` reading through
+  * [[GraftHttpFileSystem]] against an in-process JDK HttpServer that
+  * serves 206 partial content — the executors' ranged GETs are real
+  * HTTP, no egress. Spark's own split reader owns the line
+  * boundaries; these cases pin that every line arrives exactly once.
   */
 class HttpCsvSpec extends SparkSpec {
 
-  /** CSV body with line lengths varying around the chunk size so
-    * chunk boundaries land mid-line in many positions.
+  /** CSV body with line lengths varying around the split size so
+    * split boundaries land mid-line in many positions.
     */
   private lazy val csvBody: Array[Byte] = {
     val sb = new StringBuilder("id,name,score\n")
@@ -23,53 +24,55 @@ class HttpCsvSpec extends SparkSpec {
     sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  private def startServer(honorRange: Boolean): (com.sun.net.httpserver.HttpServer, String) =
-    HttpCsv.serveBytes(csvBody, "data.csv", honorRange)
+  private def withConf[T](k: String, v: String)(f: => T): T = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
 
   test("ranged scan reassembles every line exactly once across chunk boundaries") {
-    val (server, url) = startServer(honorRange = true)
-    try {
-      // 4 KiB chunks -> ~40 ranges, every boundary mid-line somewhere
-      val df = HttpCsv.rangedCsvTable(spark, url, "http_csv", chunkBytes = 4096)
+    val (server, url) = HttpFs.serveBytes(csvBody, "data.csv")
+    try withConf("spark.sql.files.maxPartitionBytes", "4096") {
+      // 4 KiB splits -> ~40 ranged reads, every boundary mid-line somewhere
+      val df = Core.addCsvTable(spark, "http_csv", Seq(url))
+      assert(df.rdd.getNumPartitions > 10)
       assert(df.count() === 5000)
       assert(df.columns.toSeq === Seq("id", "name", "score"))
       // exact content: ids are a permutation of 0..4999, scores match
       assert(df.agg(sum("id")).head().getLong(0) === (0 until 5000).map(_.toLong).sum)
       assert(df.filter(col("id") === 4999).head().getInt(2) === 4999 * 3 % 101)
       assert(df.select("id").distinct().count() === 5000)
-      // parallel shape: one partition per range, not one blob
-      assert(HttpCsv.rangedLines(spark, url, 4096).rdd.getNumPartitions > 10)
     } finally server.stop(0)
   }
 
   test("content length comes from Content-Range on a 1-byte probe") {
-    val (server, url) = startServer(honorRange = true)
-    try assert(HttpCsv.contentLength(url) === csvBody.length.toLong)
+    val (server, url) = HttpFs.serveBytes(csvBody, "data.csv")
+    try assert(HttpFs.contentLength(url) === csvBody.length.toLong)
     finally server.stop(0)
   }
 
   test("empty-but-existing file: 416 to the 1-byte probe reports length 0, not an error") {
-    val (server, url) = HttpCsv.serveBytes(Array.emptyByteArray, "empty.csv")
-    try assert(HttpCsv.contentLength(url) === 0L)
+    val (server, url) = HttpFs.serveBytes(Array.emptyByteArray, "empty.csv")
+    try assert(HttpFs.contentLength(url) === 0L)
     finally server.stop(0)
   }
 
-  test("multi-url listing table unions two servers under one name, schema pinned from the first") {
+  test("multi-url listing table unions two servers under one name, schema inferred over every url") {
     // two shards with the same header, different row ranges, on two
     // INDEPENDENT servers (≡ the reference's several HTTP paths per
-    // base store)
-    def shardBytes(lo: Int, hi: Int): Array[Byte] = {
+    // base store); only the second shard's scores are fractional
+    def shardBytes(lo: Int, hi: Int, score: Int => String): Array[Byte] = {
       val sb = new StringBuilder("id,name,score\n")
       (lo until hi).foreach(i => sb.append(i).append(",n").append(i)
-        .append(",").append(i * 3 % 101).append("\n"))
+        .append(",").append(score(i)).append("\n"))
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     }
-    val (s1, u1) = HttpCsv.serveBytes(shardBytes(0, 1200), "a.csv")
-    val (s2, u2) = HttpCsv.serveBytes(shardBytes(1200, 2000), "b.csv")
-    try {
-      val df = HttpCsv.rangedCsvTableMulti(spark, Seq(u1, u2), "http_csv_multi",
-        chunkBytes = 4096)
+    val (s1, u1) = HttpFs.serveBytes(shardBytes(0, 1200, i => s"${i * 3 % 101}"), "a.csv")
+    val (s2, u2) = HttpFs.serveBytes(shardBytes(1200, 2000, i => s"$i.5"), "b.csv")
+    try withConf("spark.sql.files.maxPartitionBytes", "4096") {
+      val df = Core.addCsvTable(spark, "http_csv_multi", Seq(u1, u2))
       assert(df.columns.toSeq === Seq("id", "name", "score"))
+      assert(df.schema("score").dataType.typeName === "double")
       assert(df.count() === 2000)
       // every row exactly once across both shards — no duplicated or
       // swallowed header/boundary lines
@@ -81,22 +84,34 @@ class HttpCsvSpec extends SparkSpec {
   }
 
   test("multi-url listing bails on header drift before any distributed work") {
-    val (s1, u1) = HttpCsv.serveBytes("id,name\n1,a\n".getBytes, "a.csv")
-    val (s2, u2) = HttpCsv.serveBytes("id,label\n2,b\n".getBytes, "b.csv")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (s1, u1) = HttpFs.serveBytes("id,name\n1,a\n".getBytes, "a.csv")
+    val (s2, u2) = HttpFs.serveBytes("id,label\n2,b\n".getBytes, "b.csv")
+    val group = s"http-drift-${System.nanoTime}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == sentinel) sentinelSeen.countDown()
+          else if (g == group) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
     try {
-      val e = intercept[IllegalArgumentException] {
-        HttpCsv.rangedCsvTableMulti(spark, Seq(u1, u2), "http_csv_drift")
-      }
+      sc.setJobGroup(group, "header drift")
+      val e = try intercept[IllegalArgumentException] {
+        Core.addCsvTable(spark, "http_csv_drift", Seq(u1, u2))
+      } finally sc.clearJobGroup()
       assert(e.getMessage.contains("header mismatch"), e.getMessage)
-    } finally { s1.stop(0); s2.stop(0) }
-  }
-
-  test("falls back correctly when the server ignores Range") {
-    val (server, url) = startServer(honorRange = false)
-    try {
-      val df = HttpCsv.rangedCsvTable(spark, url, "http_csv_noranges", chunkBytes = 16384)
-      assert(df.count() === 5000)
-      assert(df.agg(sum("id")).head().getLong(0) === (0 until 5000).map(_.toLong).sum)
-    } finally server.stop(0)
+      // the listener bus delivers in order: once the sentinel job's
+      // start arrives, every job of the registration has been counted
+      sc.setJobGroup(sentinel, "job-count sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      assert(jobs.get === 0)
+    } finally { sc.removeSparkListener(listener); s1.stop(0); s2.stop(0) }
   }
 }

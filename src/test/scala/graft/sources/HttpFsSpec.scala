@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -23,7 +24,7 @@ class HttpFsSpec extends SparkSpec {
   }
 
   private def serve(bytes: Array[Byte], path: String, honorRange: Boolean = true): String = {
-    val (srv, url) = HttpCsv.serveBytes(bytes, path, honorRange)
+    val (srv, url) = HttpFs.serveBytes(bytes, path, honorRange)
     servers ::= srv
     url
   }
@@ -85,12 +86,20 @@ class HttpFsSpec extends SparkSpec {
   }
 
   test("a server that ignores Range still yields correct reads (sliced fallback)") {
-    val body = """{"id":10}
-{"id":20}
-""".getBytes(UTF_8)
-    val url = serve(body, "norange.json", honorRange = false)
-    HttpFs.register(spark)
-    assert(spark.read.json(url).agg(sum("id")).collect().head.getLong(0) === 30L)
+    val csvBody = ("id,name\n" + (1 to 5000).map(i => s"$i,n$i\n").mkString).getBytes(UTF_8)
+    Seq[(String, Array[Byte], String => DataFrame, Long)](
+      ("norange.json", "{\"id\":10}\n{\"id\":20}\n".getBytes(UTF_8),
+        url => graft.engine.Core.addJsonTable(spark, "norange_json", Seq(url)), 30L),
+      ("norange.csv", csvBody,
+        url => graft.engine.Core.addCsvTable(spark, "norange_csv", Seq(url)),
+        (1 to 5000).map(_.toLong).sum)
+    ).foreach { case (path, body, register, want) =>
+      val url = serve(body, path, honorRange = false)
+      // small splits: every task gets the whole body and slices its window
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+      try assert(register(url).agg(sum("id")).collect().head.getLong(0) === want, path)
+      finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
   }
 
   test("filesystem is read-only and missing objects surface as FileNotFound") {
@@ -106,5 +115,11 @@ class HttpFsSpec extends SparkSpec {
     intercept[java.io.FileNotFoundException](
       fs.getFileStatus(new org.apache.hadoop.fs.Path(
         url.replace("exists.txt", "missing.txt"))))
+    // no listing over HTTP: a glob is the literal object, so a
+    // presigned URL's `?` is not a wildcard
+    val signed = new org.apache.hadoop.fs.Path(s"$url?sig=abc")
+    assert(fs.globStatus(signed).map(_.getLen).toSeq === Seq(1L))
+    assert(fs.globStatus(new org.apache.hadoop.fs.Path(
+      url.replace("exists.txt", "missing.txt?sig=abc"))) === null)
   }
 }
