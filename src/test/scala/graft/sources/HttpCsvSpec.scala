@@ -83,6 +83,16 @@ class HttpCsvSpec extends SparkSpec {
     } finally { s1.stop(0); s2.stop(0) }
   }
 
+  test("falls back correctly when the server ignores Range") {
+    val (server, url) = HttpFs.serveBytes(csvBody, "data.csv", honorRange = false)
+    try withConf("spark.sql.files.maxPartitionBytes", "16384") {
+      // small splits: every task gets the whole body and slices its window
+      val df = Core.addCsvTable(spark, "http_csv_noranges", Seq(url))
+      assert(df.count() === 5000)
+      assert(df.agg(sum("id")).head().getLong(0) === (0 until 5000).map(_.toLong).sum)
+    } finally server.stop(0)
+  }
+
   test("multi-url listing bails on header drift before any distributed work") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (s1, u1) = HttpFs.serveBytes("id,name\n1,a\n".getBytes, "a.csv")
