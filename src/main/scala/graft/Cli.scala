@@ -71,6 +71,12 @@ object Cli {
       |told: the statement does not parse (COPY ... TO, EXPLAIN ANALYZE),
       |is a command (SHOW TABLES, DESCRIBE, INSERT, ...), uses
       |IDENTIFIER(...) or EXECUTE IMMEDIATE, or reads information_schema.
+      |A CSV binding's inferred schema is kept for later calls in the same
+      |process and reused, with no inference pass, while the binding is
+      |unchanged: the same paths and session settings, and the same files
+      |with the same length and modification time (the rule make and
+      |rsync use; a rewrite that keeps both is not re-inferred). An
+      |http(s) binding infers on every call.
       |--analyze prints, after the result, per-operator runtime
       |metrics from the executed plan (files read post-pruning, rows
       |scanned, shuffle bytes/records, spill) — the EXPLAIN ANALYZE
@@ -209,8 +215,10 @@ object Cli {
     * kinds are present), each name=path binding its own table, and
     * several paths under one name unioning as a listing table.
     *
-    * Only the bindings `sql` names are registered, each with its full
-    * schema inference ([[Core.tablesNamed]]); where that cannot tell
+    * Only the bindings `sql` names are registered ([[Core.tablesNamed]]),
+    * each with all-files schema inference, or with the schema kept from
+    * an unchanged earlier registration ([[Core.addCsvTable]]); where
+    * that cannot tell
     * (an unparsable statement such as `COPY … TO` or `EXPLAIN
     * ANALYZE`, a command, `IDENTIFIER(...)`, `EXECUTE IMMEDIATE`,
     * information_schema) every binding is. So the path of a binding

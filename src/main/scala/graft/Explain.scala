@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 /** Dev tool: dump formatted physical plans for headline queries so
   * plan regressions (lost pushdown, missing broadcast, surprise
   * shuffles) are reviewable as text.
@@ -25,7 +27,7 @@ object Explain {
             org.apache.spark.sql.execution.FormattedMode))
           sb.append("\n")
         } catch {
-          case e: Throwable => sb.append(s"==== $name ==== FAILED: ${e.getMessage}\n")
+          case NonFatal(e) => sb.append(s"==== $name ==== FAILED: ${e.getMessage}\n")
         }
       }
     Files.writeString(Paths.get(outFile), sb.toString)

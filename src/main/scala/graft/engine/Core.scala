@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.HttpFs
 
@@ -100,14 +101,84 @@ object Core {
     * CoreSpec). http(s) paths read through the ranged HTTP
     * FileSystem; two or more URLs first have their header lines
     * compared ([[HttpFs.requireSameCsvHeader]]).
+    *
+    * Schema reuse: the reference infers once, when it registers the
+    * table, and every later query reuses that schema. Here each call
+    * re-registers, so the inferred schema is kept (see [[csvSchemaKey]])
+    * and a binding whose key is unchanged reads with it, running no
+    * inference job. A file counts as unchanged when its length and
+    * modification time are both unchanged (the rule `make` and
+    * `rsync` use); adding or deleting a file, or changing any session
+    * conf, re-infers. A binding with an http(s) path infers on every
+    * call: a URL has no listing or modification time.
     */
   def addCsvTable(spark: SparkSession, name: String, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "No sources provided")
     HttpFs.registerIfHttp(spark, paths)
     HttpFs.requireSameCsvHeader(name, paths)
-    val df = spark.read.options(csvOptions(paths)).csv(paths: _*)
+    // the key is taken BEFORE the read: a file that changes between
+    // the two then only leaves an entry no later listing can match
+    val key = csvSchemaKey(spark, paths)
+    val reader = spark.read.options(csvOptions(paths))
+    val df = key.flatMap(csvSchemas.get) match {
+      case Some(schema) => reader.schema(schema).csv(paths: _*)
+      case None =>
+        val inferred = reader.csv(paths: _*)
+        key.foreach(csvSchemas.put(_, inferred.schema))
+        inferred
+    }
     df.createOrReplaceTempView(name)
     df
+  }
+
+  /** What CSV schema inference depends on: the path list (which also
+    * fixes [[csvOptions]]), every file under those paths as
+    * `(path, length, modificationTime)` — listed recursively with no
+    * extension filter, a superset of what Spark reads — and the
+    * session's SQL confs (`spark.sql.timestampType` and the like).
+    */
+  private final case class CsvSchemaKey(paths: Seq[String],
+      files: Seq[(String, Long, Long)], confs: Map[String, String])
+
+  /** The key for `paths`, or None where no schema may be reused: an
+    * http(s) path, a path that matches nothing, or a listing that
+    * fails — Spark's own read then raises what it raises today
+    * (PATH_NOT_FOUND for a missing path).
+    */
+  private def csvSchemaKey(spark: SparkSession, paths: Seq[String]): Option[CsvSchemaKey] =
+    if (paths.exists(HttpFs.isHttp)) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val roots = paths.map { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        val fs = path.getFileSystem(conf)
+        fs -> Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
+      }
+      if (roots.exists(_._2.isEmpty)) None
+      else {
+        val files = roots.flatMap { case (fs, matched) =>
+          matched.flatMap { st =>
+            val it = fs.listFiles(st.getPath, true)
+            Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+              .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          }
+        }.sorted
+        Some(CsvSchemaKey(paths.toVector, files, spark.sessionState.conf.getAllConfs))
+      }
+    } catch { case _: java.io.IOException => None }
+
+  /** Inferred CSV schemas by [[CsvSchemaKey]]: an access-ordered LRU
+    * of 64 entries. Every access holds the map's lock, since
+    * `Cli.run` may be called from several threads.
+    */
+  private object csvSchemas {
+    private val MaxEntries = 64
+    private val lru = new java.util.LinkedHashMap[CsvSchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[CsvSchemaKey, StructType]): Boolean = size() > MaxEntries
+    }
+    def get(k: CsvSchemaKey): Option[StructType] = lru.synchronized(Option(lru.get(k)))
+    def put(k: CsvSchemaKey, s: StructType): Unit = lru.synchronized { lru.put(k, s); () }
   }
 
   /** Register one-or-more parquet paths as a named table. */

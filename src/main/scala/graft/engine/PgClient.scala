@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 /** Minimal Postgres v3 wire-protocol CLIENT: trust startup + simple
   * query, text-format results. This is the sandbox-legal realization
   * of the reference's vendored Postgres connector (connection +
@@ -41,7 +43,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
         new DataOutputStream(new BufferedOutputStream(socket.getOutputStream)))
     } catch {
       case e: Throwable =>
-        try socket.close() catch { case _: Throwable => () }
+        try socket.close() catch { case NonFatal(_) => () }
         throw e
     }
 
@@ -120,7 +122,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     case e: Throwable => runQuiet(socket.close()); throw e
   }
 
-  private def runQuiet(f: => Unit): Unit = try f catch { case _: Throwable => () }
+  private def runQuiet(f: => Unit): Unit = try f catch { case NonFatal(_) => () }
 
   private def readMsg(): (Char, Array[Byte]) = {
     val tpe = in.read()

@@ -101,16 +101,19 @@ object Ranks {
     * drop-in equivalent there.) `lit(r.get(0))` requires a
     * literal-encodable stratum type (atomic types are; exotic structs
     * are not) — the same contract as grouping by the column at all.
+    * A stratum missing from `rows` (one a non-deterministic frame
+    * brings in after the collect) matches no branch and takes the
+    * empty-bounds base: bucket 0, like a stratum with no boundaries.
     */
   private def literalBucket(rows: Array[org.apache.spark.sql.Row],
       strataCol: String, key: Column, nBuckets: Int): Column = {
     val k = key.cast("double")
-    val boundsCol = rows.foldLeft(lit(null).cast("array<double>")) { (acc, r) =>
+    val boundsCol = rows.foldLeft(typedLit(Seq.empty[Double])) { (acc, r) =>
       val bnds = Option(r.getSeq[Double](1)).getOrElse(Seq.empty[Double]).toSeq
       when(col(strataCol) <=> lit(r.get(0)), typedLit(bnds)).otherwise(acc)
     }
     when(key.isNull, lit(nBuckets))
-      .otherwise(coalesce(size(filter(boundsCol, b => b < k)), lit(0)).cast("int"))
+      .otherwise(size(filter(boundsCol, b => b < k)))
   }
 
   /** [[withRangeBucket]]'s boundaries, collected: returns a bucket

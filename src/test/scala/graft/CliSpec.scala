@@ -3,6 +3,8 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 
+import graft.engine.Core
+
 class CliSpec extends SparkSpec {
 
   private def capture(args: String*): (Int, String) = {
@@ -218,6 +220,27 @@ class CliSpec extends SparkSpec {
       srv.close()
       spark.sql("DROP TABLE IF EXISTS named_sink")
     }
+  }
+
+  test("a warm exec reuses its bindings' inferred schemas: only the query's jobs run, " +
+      "and a rewritten file is read anew") {
+    val dir = Files.createTempDirectory("graft-cli-warm")
+    Files.writeString(dir.resolve("a.csv"), "k,v\n1,10\n2,20\n")
+    Files.writeString(dir.resolve("b.csv"), "k,v\n3,30\n")
+    val sql = "SELECT count(*) AS n, sum(v) AS s FROM warm"
+    def exec() = jobsStarted(capture("exec", "--csv", s"warm=$dir", sql))
+    val ((code1, out1), cold) = exec()
+    val ((code2, out2), warm) = exec()
+    assert(code1 === 0 && code2 === 0, out1 + out2)
+    assert(out1.contains("| 3 | 60 |"), out1)
+    assert(out2 === out1)
+    val (_, queryOnly) = jobsStarted(Core.pretty(Core.execute(spark, sql)))
+    assert(warm === queryOnly, s"cold $cold, warm $warm, query alone $queryOnly")
+    assert(warm < cold, s"cold $cold, warm $warm")
+    Files.writeString(dir.resolve("b.csv"), "k,v\n3,30.5\n4,40\n")
+    val ((code3, out3), _) = exec()
+    assert(code3 === 0, out3)
+    assert(out3.contains("| 4 | 100.5 |"), out3)
   }
 
   test("haiku prints the easter egg") {

@@ -143,6 +143,69 @@ class CoreSpec extends SparkSpec {
     assert(sampled.schema("v").dataType.typeName === "double") // Spark-default superset
   }
 
+  test("an unchanged CSV binding reuses its schema with no Spark job; a changed file, " +
+      "file set or session conf re-infers") {
+    import org.apache.spark.sql.types._
+    // (label, files before, the change, confs for the changed
+    // registration, column, type before, type after)
+    val cases = Seq[(String, Seq[(String, Seq[String])], java.nio.file.Path => Unit,
+        Map[String, String], String, DataType, DataType)](
+      ("a file rewritten with a different length",
+        Seq("a.csv" -> Seq("id,v", "1,10", "2,20")),
+        d => writeCsv(d, "a.csv", Seq("id,v", "1,10", "2,2.5")),
+        Map.empty, "v", IntegerType, DoubleType),
+      ("a file added",
+        Seq("a.csv" -> Seq("id,v", "1,10")),
+        d => writeCsv(d, "b.csv", Seq("id,v", "3,1.5")),
+        Map.empty, "v", IntegerType, DoubleType),
+      ("a file deleted",
+        Seq("a.csv" -> Seq("id,v", "1,10"), "b.csv" -> Seq("id,v", "3,1.5")),
+        d => Files.delete(d.resolve("b.csv")),
+        Map.empty, "v", DoubleType, IntegerType),
+      ("the session conf changed",
+        Seq("a.csv" -> Seq("id,ts", "1,2023-01-02 03:04:05")),
+        _ => (),
+        Map("spark.sql.timestampType" -> "TIMESTAMP_NTZ"), "ts", TimestampType, TimestampNTZType))
+    for (((label, files, change, confs, column, before, after), i) <- cases.zipWithIndex) {
+      val dir = Files.createTempDirectory("graft-reuse")
+      files.foreach { case (n, lines) => writeCsv(dir, n, lines) }
+      val name = s"t_reuse_$i"
+      val (first, firstJobs) = jobsStarted(Core.addCsvTable(spark, name, Seq(dir.toString)))
+      assert(first.schema(column).dataType === before, label)
+      assert(firstJobs > 0, s"$label: the first registration infers")
+      val (again, againJobs) = jobsStarted(Core.addCsvTable(spark, name, Seq(dir.toString)))
+      assert(againJobs === 0, s"$label: an unchanged binding starts no job")
+      assert(again.schema === first.schema, label)
+      change(dir)
+      val old = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val (changed, changedJobs) = jobsStarted(Core.addCsvTable(spark, name, Seq(dir.toString)))
+        assert(changed.schema(column).dataType === after, label)
+        assert(changedJobs > 0, s"$label: a changed binding infers again")
+      } finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
+  test("CSV schema reuse: http(s) bindings infer on every registration; a missing path " +
+      "still fails with PATH_NOT_FOUND") {
+    val (server, url) = graft.sources.HttpFs.serveBytes("id,v\n1,10\n".getBytes, "h.csv")
+    try for (_ <- 1 to 2) {
+      val (_, jobs) = jobsStarted(Core.addCsvTable(spark, "t_reuse_http", Seq(url)))
+      assert(jobs > 0, "an http binding infers each time")
+    } finally server.stop(0)
+    val dir = Files.createTempDirectory("graft-reuse-gone")
+    writeCsv(dir, "a.csv", Seq("id", "1"))
+    Core.addCsvTable(spark, "t_reuse_gone", Seq(dir.toString))
+    Files.delete(dir.resolve("a.csv"))
+    Files.delete(dir)
+    for (path <- Seq(dir.toString, "/no/such/graft-dir")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Core.addCsvTable(spark, "t_reuse_gone", Seq(path)))
+      assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    }
+  }
+
   test("copyTo round-trips csv and parquet") {
     val out = Files.createTempDirectory("graft-out")
     val df = spark.read.parquet(s"$Sf/region.parquet")

@@ -100,6 +100,22 @@ class RanksSpec extends SparkSpec {
     assert(e.getMessage.contains("strata"))
   }
 
+  test("collectedRangeBucket: a stratum the bounds collect did not see lands in bucket 0") {
+    val bucket = Ranks.collectedRangeBucket(data, "s", col("k"), 8)
+    // stratum "z" arrives after the collect; a NULL key keeps its
+    // trailing bucket. Both ANSI modes: legacy size(NULL) is -1.
+    val late = Seq[(Long, String, java.lang.Double)]((1L, "z", 3.0), (2L, "z", null))
+      .toDF("id", "s", "k")
+    for (ansi <- Seq("true", "false")) {
+      val old = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val got = late.withColumn("bucket", bucket).orderBy("id").select("bucket").as[Int].collect()
+        assert(got.toSeq === Seq(0, 8), s"ansi=$ansi")
+      } finally spark.conf.set("spark.sql.ansi.enabled", old)
+    }
+  }
+
   test("bucketOffsetsWithTotal: b_off matches bucketOffsets and tw is the stratum grand total (r21)") {
     val keyed = Ranks.withRangeBucket(data, Seq("s"), col("k"), 8, descending = false)
     val wt = Ranks.bucketOffsetsWithTotal(keyed, Seq("s"), col("w")).collect()

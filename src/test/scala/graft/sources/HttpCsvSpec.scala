@@ -94,34 +94,14 @@ class HttpCsvSpec extends SparkSpec {
   }
 
   test("multi-url listing bails on header drift before any distributed work") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (s1, u1) = HttpFs.serveBytes("id,name\n1,a\n".getBytes, "a.csv")
     val (s2, u2) = HttpFs.serveBytes("id,label\n2,b\n".getBytes, "b.csv")
-    val group = s"http-drift-${System.nanoTime}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == sentinel) sentinelSeen.countDown()
-          else if (g == group) jobs.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "header drift")
-      val e = try intercept[IllegalArgumentException] {
+      val (e, jobs) = jobsStarted(intercept[IllegalArgumentException] {
         Core.addCsvTable(spark, "http_csv_drift", Seq(u1, u2))
-      } finally sc.clearJobGroup()
+      })
       assert(e.getMessage.contains("header mismatch"), e.getMessage)
-      // the listener bus delivers in order: once the sentinel job's
-      // start arrives, every job of the registration has been counted
-      sc.setJobGroup(sentinel, "job-count sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      assert(jobs.get === 0)
-    } finally { sc.removeSparkListener(listener); s1.stop(0); s2.stop(0) }
+      assert(jobs === 0)
+    } finally { s1.stop(0); s2.stop(0) }
   }
 }
