@@ -5,6 +5,7 @@ import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -133,7 +134,7 @@ object PgWire {
           t.start()
         } catch {
           case _: SocketException => // closed
-          case _: Throwable if closed =>
+          case NonFatal(_) if closed =>
         }
       }
     }, s"pgwire-accept-$boundPort")
@@ -159,7 +160,7 @@ object PgWire {
       password: Option[String] = None): Server = new Server(spark, port, password)
 
   private def runCatching(f: => Unit): Unit =
-    try f catch { case _: Throwable => () }
+    try f catch { case NonFatal(_) => () }
 
   /** Every session that may hold a cached relation of a served table:
     * one per live connection (each is `spark.newSession()`) plus each
@@ -204,7 +205,7 @@ object PgWire {
     val it = liveSessions.iterator()
     while (it.hasNext) {
       val s = it.next()
-      try s.catalog.refreshTable(tbl) catch { case _: Throwable => () }
+      try s.catalog.refreshTable(tbl) catch { case NonFatal(_) => () }
     }
   }
 
@@ -452,7 +453,7 @@ object PgWire {
                 }
                 portals(portal) = Portal(r, resolveResultFormats(rfmts, r.schema))
                 msg(out, '2')(_ => ())
-              } catch { case e: Throwable => extError(out, errMsg(e)) }
+              } catch { case NonFatal(e) => extError(out, errMsg(e)) }
             case 'D' => // Describe
               val kind = payload(0).toChar
               val (name, _) = cstrAt(payload, 1)
@@ -487,7 +488,7 @@ object PgWire {
                       (schema, Array.fill(schema.size)(0))
                     }
                   } else portals.get(name).map(p => (p.result.schema, p.resultFormats))
-                } catch { case e: Throwable => extError(out, errMsg(e)); None }
+                } catch { case NonFatal(e) => extError(out, errMsg(e)); None }
               schemaOpt match {
                 case Some((s, f)) if s.nonEmpty => rowDescription(out, s, f)
                 case _                          => msg(out, 'n')(_ => ()) // NoData
@@ -515,7 +516,7 @@ object PgWire {
                       if (it.hasNext) msg(out, 's')(_ => ()) // PortalSuspended
                       else msg(out, 'C')(cstr(_, s"SELECT $n"))
                     }
-                  } catch { case e: Throwable => extError(out, errMsg(e)) }
+                  } catch { case NonFatal(e) => extError(out, errMsg(e)) }
               }
             case 'C' => // Close statement/portal
               val kind = payload(0).toChar
@@ -594,7 +595,7 @@ object PgWire {
       }
     } catch {
       case _: EOFException => false // client hung up mid-exchange
-      case e: Throwable    => fatal(errMsg(e))
+      case NonFatal(e)     => fatal(errMsg(e))
     }
   }
 
@@ -646,7 +647,7 @@ object PgWire {
             }
           }
         } catch {
-          case e: Throwable => writeError(out, errMsg(e)); failed = true
+          case NonFatal(e) => writeError(out, errMsg(e)); failed = true
         }
       }
     }
@@ -1214,12 +1215,12 @@ object PgWire {
       def tryParse(l: String): Unit =
         if (parseError.isEmpty) {
           try parseRecord(l)
-          catch { case e: Throwable => parseError = Some(e) }
+          catch { case NonFatal(e) => parseError = Some(e) }
         }
       def tryParseTuple(t: Array[Array[Byte]]): Unit =
         if (parseError.isEmpty) {
           try parseTuple(t)
-          catch { case e: Throwable => parseError = Some(e) }
+          catch { case NonFatal(e) => parseError = Some(e) }
         }
       while (!done) {
         val tpe = in.read()
@@ -1231,7 +1232,7 @@ object PgWire {
           case 'd' => if (parseError.isEmpty) {
             if (binary) {
               try binParser.feed(payload).foreach(tryParseTuple)
-              catch { case e: Throwable => parseError = Some(e) }
+              catch { case NonFatal(e) => parseError = Some(e) }
             } else splitter.feed(payload).foreach(tryParse)
           }
           case 'c' => done = true

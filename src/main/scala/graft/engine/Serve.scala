@@ -3,6 +3,7 @@ package graft.engine
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** Remote SQL surface — the Spark-native answer to the reference's
   * pgwire server (`/root/reference/csvb_engine/src/lib.rs:91-132`:
@@ -18,12 +19,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Session-visibility contract: each Connect client gets an ISOLATED
   * SparkSession (Connect's security model), so serve registers tables
-  * in the SHARED external catalog (`CREATE TABLE ... USING ...
-  * LOCATION`, plus a persistent UNION ALL view for multi-path
-  * groups) instead of the temp views the one-process `exec` path
-  * uses — that is what makes the tables visible to every client
-  * session, the analog of the reference serving its
-  * SessionContext-registered tables to every pgwire connection.
+  * in the SHARED external catalog (one external table per path, plus
+  * a persistent UNION ALL view for multi-path groups) instead of the
+  * temp views the one-process `exec` path uses — that is what makes
+  * the tables visible to every client session, the analog of the
+  * reference serving its SessionContext-registered tables to every
+  * pgwire connection.
   */
 object Serve {
 
@@ -46,44 +47,50 @@ object Serve {
     * Validation precedes any catalog mutation (same contract as
     * [[registerSharedJdbc]]): every path is resolved first, so a
     * re-registration with a bad path is rejected before the working
-    * registration is touched; a CREATE failing after validation
-    * (e.g. a path deleted between validation and CREATE — the
-    * residual TOCTOU window both registration paths accept) drops
-    * the slots this call made, though the prior registration the
-    * CREATEs already replaced is not resurrected.
+    * registration is touched. That read is the registration's one
+    * metadata read: a non-csv path's validated schema becomes its
+    * table's schema, so CREATE infers nothing again; a csv path is
+    * only listed, and its CREATE is its one inference. A CREATE
+    * failing after validation (e.g. a path deleted between
+    * validation and CREATE — the residual TOCTOU window both
+    * registration paths accept) drops the slots this call made,
+    * though the prior registration the CREATEs already replaced is
+    * not resurrected.
     */
   def registerShared(spark: SparkSession, name: String, paths: Seq[String], format: String): Unit = {
     require(paths.nonEmpty, s"no paths for table $name")
     // http(s) paths resolve through the ranged HTTP FileSystem — the
     // reference's per-scheme object-store registration posture
     graft.sources.HttpFs.registerIfHttp(spark, paths)
-    paths.foreach { p =>
+    // one validated schema per path, None for csv
+    val schemas: Seq[Option[StructType]] = paths.map { p =>
       format match {
         // csv resolves as text: path listing happens eagerly (missing
         // path throws here) but nothing is scanned — a csv+inferSchema
         // validation read would cost a FULL pass over the data before
-        // the registration's own first-query inference pass
-        case "csv" => spark.read.text(p).schema
-        case f     => spark.read.format(f).load(p).schema
+        // the CREATE's own inference pass
+        case "csv" => spark.read.text(p); None
+        case f     => Some(spark.read.format(f).load(p).schema)
       }
-      ()
     }
-    val opts = format match {
-      case "csv" => Core.csvOptions(paths)
-        .map { case (k, v) => s"$k '${sqlLit(v)}'" }.mkString("OPTIONS (", ", ", ")")
-      case _     => ""
-    }
-    def mkTable(tbl: String, path: String): Unit = {
+    lazy val csvOpts = Core.csvOptions(paths)
+      .map { case (k, v) => s"$k '${sqlLit(v)}'" }.mkString("OPTIONS (", ", ", ")")
+    def mkTable(tbl: String, path: String, schema: Option[StructType]): Unit = {
       dropAnyShape(spark, tbl)
-      spark.sql(s"CREATE TABLE `$tbl` USING $format $opts LOCATION '${sqlLit(path)}'")
+      schema match {
+        // an external table (the "path" option is its location) with
+        // the validated schema: the CREATE runs no inference job
+        case Some(s) => spark.catalog.createTable(s"`$tbl`", format, s, Map("path" -> path))
+        case None    => spark.sql(s"CREATE TABLE `$tbl` USING csv $csvOpts LOCATION '${sqlLit(path)}'")
+      }
       ()
     }
     val created = scala.collection.mutable.ListBuffer.empty[String]
     try {
-      if (paths.size == 1) { mkTable(name, paths.head); created += name }
+      if (paths.size == 1) { mkTable(name, paths.head, schemas.head); created += name }
       else {
         val parts = paths.zipWithIndex.map { case (p, i) => s"${name}__p$i" -> p }
-        parts.foreach { case (tbl, p) => mkTable(tbl, p); created += tbl }
+        parts.zip(schemas).foreach { case ((tbl, p), s) => mkTable(tbl, p, s); created += tbl }
         dropAnyShape(spark, name)
         spark.sql(parts.map { case (tbl, _) => s"SELECT * FROM `$tbl`" }
           .mkString(s"CREATE VIEW `$name` AS ", " UNION ALL ", ""))

@@ -94,11 +94,9 @@ object Ranks {
   /** The literal `when`-chain bucket column over collected boundary
     * rows. Stratum match is null-safe (`<=>`), so a NULL stratum — if
     * a caller ever has one — gets ITS OWN boundaries like any other
-    * stratum value, instead of falling through to bucket 0. (Note the
-    * remaining contract difference from [[withRangeBucket]]: the join
-    * form's inner join DROPS null-stratum rows entirely; this form
-    * keeps them. Current callers have non-null strata, so the two are
-    * drop-in equivalent there.) `lit(r.get(0))` requires a
+    * stratum value, instead of falling through to bucket 0, as
+    * [[withRangeBucket]]'s null-safe join does, so both forms keep
+    * NULL-stratum rows. `lit(r.get(0))` requires a
     * literal-encodable stratum type (atomic types are; exotic structs
     * are not) — the same contract as grouping by the column at all.
     * A stratum missing from `rows` (one a non-deterministic frame
@@ -189,10 +187,21 @@ object Ranks {
       val cmp: (Column, Column) => Column =
         if (descending) (b, k) => b > k else (b, k) => b < k
       // no strata ⇒ the bounds frame is ONE row; an empty using-column
-      // join is an (intended) broadcast cross join, spelled explicitly
+      // join is an (intended) broadcast cross join, spelled explicitly.
+      // With strata the join is null-safe (`<=>`), so a NULL stratum
+      // gets its own boundaries and keeps its rows, as in
+      // [[literalBucket]]; the columns keep the using-join's order
+      // (strata first).
       val withBounds =
         if (strataCols.isEmpty) df.crossJoin(broadcast(bounds))
-        else df.join(broadcast(bounds), strataCols)
+        else {
+          val keys = strataCols.indices.map(i => s"__rb_s$i")
+          val renamed = bounds.select(
+            strataCols.zip(keys).map { case (c, k) => col(c).as(k) } :+ col("bnds"): _*)
+          val on = strataCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
+          val rest = df.columns.filterNot(strataCols.contains).map(c => s"`${c.replace("`", "``")}`")
+          df.join(broadcast(renamed), on).select((strataCols ++ rest :+ "bnds").map(col): _*)
+        }
       withBounds
         .withColumn("bucket",
           when(key.isNull, lit(nBuckets))

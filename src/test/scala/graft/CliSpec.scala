@@ -546,6 +546,36 @@ class CliSpec extends SparkSpec {
     assert(!spark.catalog.tableExists("vshare__p0")) // no partial slots
   }
 
+  test("registerShared of a parquet path reads its schema once: 1 Spark job, an external " +
+      "table with the validated schema, kept through a failed re-registration") {
+    val dir = Files.createTempDirectory("graft-serve-once")
+    val p = s"$dir/t.parquet"
+    spark.range(7).selectExpr("id", "cast(id * 1.5 AS double) AS v", "cast(id AS string) AS s")
+      .write.parquet(p)
+    val (_, jobs) = jobsStarted(graft.engine.Serve.registerShared(spark, "once_pq", Seq(p), "parquet"))
+    assert(jobs === 1, "the validation read is the one schema read")
+    assert(spark.table("once_pq").schema === spark.read.parquet(p).schema)
+    // external: replacing or dropping the table must never delete the data
+    assert(spark.catalog.getTable("once_pq").tableType === "EXTERNAL")
+    intercept[Exception] {
+      graft.engine.Serve.registerShared(spark, "once_pq", Seq(s"$dir/missing.parquet"), "parquet")
+    }
+    assert(spark.table("once_pq").count() === 7)
+    graft.engine.Serve.registerShared(spark, "once_pq", Seq(p), "parquet")
+    assert(spark.sql("SELECT sum(id), sum(v) FROM once_pq").head() === org.apache.spark.sql.Row(21L, 31.5))
+  }
+
+  test("registerShared of a partitioned parquet directory serves its partition column") {
+    val dir = Files.createTempDirectory("graft-serve-part")
+    val p = s"$dir/t"
+    spark.range(9).selectExpr("id", "cast(id % 3 AS int) AS part").write.partitionBy("part").parquet(p)
+    graft.engine.Serve.registerShared(spark, "part_pq", Seq(p), "parquet")
+    val served = spark.table("part_pq")
+    assert(served.schema === spark.read.parquet(p).schema)
+    assert(served.count() === 9)
+    assert(spark.sql("SELECT sum(id) FROM part_pq WHERE part = 2").head().getLong(0) === 2L + 5 + 8)
+  }
+
   test("registerShared reads csv under exec's contract: time-of-day stays a string, non-.csv skipped") {
     val dir = Files.createTempDirectory("graft-serve-csv")
     Files.writeString(dir.resolve("w.csv"), "id,tod\n1,12:34:56\n2,23:59:59\n")

@@ -206,6 +206,62 @@ class CoreSpec extends SparkSpec {
     }
   }
 
+  test("csvSchemaKey lists the files a recursive listFiles lists: nested directory, " +
+      "single file, glob, non-.csv sibling") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft-key")
+    Files.createDirectories(dir.resolve("sub/deeper"))
+    writeCsv(dir, "a.csv", Seq("id", "1"))
+    writeCsv(dir, "notes.txt", Seq("not", "csv"))
+    writeCsv(dir.resolve("sub"), "b.csv", Seq("id", "2", "3"))
+    writeCsv(dir.resolve("sub/deeper"), "c.csv", Seq("id", "4"))
+    def listFiles(paths: Seq[String]): Seq[(String, Long, Long)] = {
+      val conf = spark.sessionState.newHadoopConf()
+      paths.flatMap { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        fs.globStatus(path).toSeq.flatMap { st =>
+          val it = fs.listFiles(st.getPath, true)
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+            .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+      }.sorted
+    }
+    for (paths <- Seq(Seq(dir.toString), Seq(dir.resolve("a.csv").toString),
+        Seq(s"$dir/sub/*"), Seq(dir.resolve("sub").toString, dir.resolve("a.csv").toString))) {
+      val want = listFiles(paths)
+      assert(want.nonEmpty, paths)
+      assert(Core.csvSchemaKey(spark, paths).map(_.files) === Some(want), paths)
+    }
+    assert(Core.csvSchemaKey(spark, Seq(dir.toString)).get.files.map(_._1)
+      .exists(_.endsWith("/notes.txt")), "the key covers non-.csv files too")
+  }
+
+  test("a warm addCsvTable reads no file permission") {
+    val dir = Files.createTempDirectory("graft-perm")
+    Files.createDirectories(dir.resolve("sub"))
+    writeCsv(dir, "a.csv", Seq("id,v", "1,10"))
+    writeCsv(dir, "b.csv", Seq("id,v", "2,20"))
+    // listed by the key's recursive walk; a non-partition subdirectory
+    // is not read by Spark
+    writeCsv(dir.resolve("sub"), "c.csv", Seq("id,v", "3,30"))
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${PermissionCountingFs.Scheme}.impl", classOf[PermissionCountingFs].getName)
+    val path = s"${PermissionCountingFs.Scheme}://$dir"
+    // the counter counts: a recursive listFiles reads every permission
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    PermissionCountingFs.reads.set(0)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(path), true)
+    while (it.hasNext) it.next()
+    assert(PermissionCountingFs.reads.get > 0)
+    Core.addCsvTable(spark, "t_perm", Seq(path))
+    PermissionCountingFs.reads.set(0)
+    val (warm, jobs) = jobsStarted(Core.addCsvTable(spark, "t_perm", Seq(path)))
+    assert(jobs === 0, "a warm registration")
+    assert(PermissionCountingFs.reads.get === 0)
+    assert(warm.count() === 2)
+  }
+
   test("copyTo round-trips csv and parquet") {
     val out = Files.createTempDirectory("graft-out")
     val df = spark.read.parquet(s"$Sf/region.parquet")
@@ -407,5 +463,39 @@ class CoreSpec extends SparkSpec {
       assert(df.columns.toSeq === Seq("plan"), df.columns.toSeq)
       assert(df.collect().head.getString(0).contains("AnalyzeTable"))
     } finally spark.sql("DROP TABLE IF EXISTS graft_ea_t")
+  }
+}
+
+/** The local file system under the `permcount` scheme, whose file
+  * statuses count the reads of their permission, owner and group and
+  * answer them with FileStatus's defaults (the local FileSystem
+  * without native IO forks `ls -ld` for each such read).
+  */
+class PermissionCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  override def getUri: java.net.URI = java.net.URI.create(s"${PermissionCountingFs.Scheme}:///")
+  override def getScheme: String = PermissionCountingFs.Scheme
+
+  private def counting(st: FileStatus): FileStatus = st match {
+    case c: PermissionCountingFs.Status => c
+    case _                              => new PermissionCountingFs.Status(st)
+  }
+  override def getFileStatus(f: Path): FileStatus = counting(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(counting)
+}
+
+object PermissionCountingFs {
+  val Scheme = "permcount"
+  val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  final class Status(st: org.apache.hadoop.fs.FileStatus) extends org.apache.hadoop.fs.FileStatus(
+      st.getLen, st.isDirectory, st.getReplication, st.getBlockSize, st.getModificationTime,
+      st.getPath) {
+    override def getPermission: org.apache.hadoop.fs.permission.FsPermission = {
+      reads.incrementAndGet(); super.getPermission
+    }
+    override def getOwner: String = { reads.incrementAndGet(); super.getOwner }
+    override def getGroup: String = { reads.incrementAndGet(); super.getGroup }
   }
 }

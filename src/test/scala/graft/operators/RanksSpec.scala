@@ -100,6 +100,26 @@ class RanksSpec extends SparkSpec {
     assert(e.getMessage.contains("strata"))
   }
 
+  test("rangeBucketedAuto keeps a NULL stratum with its own boundaries on both paths") {
+    val withNull = data.withColumn("s", when(col("id") % 3 === 0, lit(null)).otherwise(col("s")))
+    val nullRows = withNull.where(col("s").isNull).count()
+    val lite = Ranks.rangeBucketedAuto(withNull, "s", col("k"), 8)
+    // a cap of 0 forces the join-form fallback
+    val fell = Ranks.rangeBucketedAuto(withNull, "s", col("k"), 8, maxCollectedStrata = 0)
+    assert(fell.queryExecution.analyzed.toString.contains("percentile_approx"))
+    assert(!fell.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+    for ((label, keyed) <- Seq("literal" -> lite, "fallback" -> fell)) {
+      assert(keyed.columns.toSet === withNull.columns.toSet + "bucket", label)
+      assert(keyed.count() === 5000, label)
+      val nulls = keyed.where(col("s").isNull && col("k").isNotNull)
+        .select("k", "bucket").as[(Double, Int)].collect().sortBy(_._1)
+      assert(nulls.length + keyed.where(col("s").isNull && col("k").isNull).count() === nullRows, label)
+      // its own boundaries: order-consistent buckets spread over the range
+      assert(nulls.map(_._2).toSeq === nulls.map(_._2).toSeq.sorted, label)
+      assert(nulls.map(_._2).distinct.length > 1, label)
+    }
+  }
+
   test("collectedRangeBucket: a stratum the bounds collect did not see lands in bucket 0") {
     val bucket = Ranks.collectedRangeBucket(data, "s", col("k"), 8)
     // stratum "z" arrives after the collect; a NULL key keeps its
