@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every declared query, timed over
@@ -98,7 +101,7 @@ object Bench {
     // to enable once, and fall back to the -1 sentinel if we can't
     private val tcpuOk: Boolean = tmx.isThreadCpuTimeSupported && {
       try { if (!tmx.isThreadCpuTimeEnabled) tmx.setThreadCpuTimeEnabled(true); true }
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
     }
     def threadCpuMs: Long =
       if (!tcpuOk) -1L
@@ -172,11 +175,11 @@ object Bench {
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     val planDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PLAN_DIR", "/tmp/graft_bench_plans"))
-    try java.nio.file.Files.createDirectories(planDir) catch { case _: Throwable => () }
+    try java.nio.file.Files.createDirectories(planDir) catch { case _: java.io.IOException => () }
     val runCounter = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     def lastExecId(): Long =
       try spark.sharedState.statusStore.executionsList().lastOption.map(_.executionId).getOrElse(-1L)
-      catch { case _: Throwable => -1L }
+      catch { case NonFatal(_) => -1L }
     def capturePlans(name: String, runIdx: Int, sinceId: Long, wallSec: Double): Unit =
       try {
         // the status bus is async: poll until the execution list stops
@@ -208,7 +211,7 @@ object Bench {
             sb.append(s"  ${m.name} [${m.accumulatorId}] = ${mv.getOrElse(m.accumulatorId, "-")}\n")
         }
         java.nio.file.Files.writeString(planDir.resolve(s"$name-r$runIdx.txt"), sb.toString)
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
 
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       spark.catalog.clearCache()
@@ -240,7 +243,7 @@ object Bench {
           capturePlans(name, runCounter(name), sinceId, wall)
         }
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
     }
@@ -337,7 +340,7 @@ object Bench {
                 else Seq("/tmp/graft_bench_detail.json")
     for (p <- sinks)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), report)
-      catch { case _: Throwable => () }
+      catch { case _: java.io.IOException => () }
     spark.stop()
     // the full line prints for humans, but LAST comes a short headline
     // guaranteed to survive a 2,000-byte stdout tail capture intact
@@ -366,7 +369,7 @@ object Bench {
     if (only.isEmpty)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(sidecarPath), shortLine)
-      catch { case _: Throwable => () }
+      catch { case _: java.io.IOException => () }
     println(fullLine)
     println(shortLine)
   }

@@ -91,8 +91,13 @@ object Cli {
       |<tbl>: --jdbc legs read through Spark JDBC, --pg legs speak the
       |Postgres v3 wire protocol directly (no driver jar; one
       |connection per shard; --pg-shard-password authenticates to the
-      |shards via SCRAM-SHA-256). Column reordering and nullability
-      |differences between shards are accepted (resolved by name);
+      |shards via SCRAM-SHA-256). A --pg leg ships only the columns
+      |the query reads and the predicates both engines evaluate alike
+      |(integral, boolean and date comparisons; string = and IN); Spark
+      |evaluates every predicate again. Each shard's schema is probed
+      |once per session and reused; a statement that finds it changed
+      |fails, and the next one probes again. Column reordering and
+      |nullability differences between shards are accepted (resolved by name);
       |--strict-schema restores the reference's identical-schema bail.
       |With "<SQL>" it answers inline, without it serves the federated
       |view over Spark Connect (wire legs under global_temp).
@@ -399,9 +404,10 @@ object Cli {
     }
     // every leg reads the SAME remote table name, unioned under the
     // reference's schema bail: JDBC legs through Spark's JDBC source,
-    // --pg legs through the wire-protocol client (one connection per
+    // --pg legs through the wire-protocol source (one connection per
     // shard — the reference's connection-per-shard posture,
-    // csvb/src/bin/csvb.rs:111-121)
+    // csvb/src/bin/csvb.rs:111-121 — shipping only the columns and
+    // rows the query needs)
     def allLegs: Seq[org.apache.spark.sql.DataFrame] =
       (if (urls.nonEmpty) graft.engine.Federation.jdbcShards(spark, urls, dbtable)
        else Seq.empty) ++
@@ -416,17 +422,23 @@ object Cli {
       try Some(graft.engine.Federation.unionShards(allLegs, strict))
       catch {
         case e: IllegalArgumentException =>
+          // the bail may rest on a stale cached schema: probe again next time
+          pgLegs.foreach { case (h, p) => graft.sources.PgFederation.forget(h, p, dbtable) }
           out.println(e.getMessage)
           None
       }
     query match {
       case Some(sql) =>
-        unionOrBail() match {
-          case None => 2
-          case Some(union) =>
-            union.createOrReplaceTempView(tableName)
-            out.println(Core.pretty(Core.execute(spark, sql), maxRows))
-            0
+        // one statement: if it fails, the wire legs it read drop their
+        // cached schemas, so the next statement probes them again
+        graft.sources.PgFederation.statement {
+          unionOrBail() match {
+            case None => 2
+            case Some(union) =>
+              union.createOrReplaceTempView(tableName)
+              out.println(Core.pretty(Core.execute(spark, sql), maxRows))
+              0
+          }
         }
       case None if pgLegs.isEmpty =>
         try graft.engine.Serve.registerSharedJdbc(spark, tableName, urls, dbtable, strict)

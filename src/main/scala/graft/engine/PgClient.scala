@@ -42,7 +42,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
       (new DataInputStream(new BufferedInputStream(socket.getInputStream)),
         new DataOutputStream(new BufferedOutputStream(socket.getOutputStream)))
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         try socket.close() catch { case NonFatal(_) => () }
         throw e
     }
@@ -119,7 +119,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     }
     if (err != null) throw new RuntimeException(s"pg startup failed: $err")
   } catch {
-    case e: Throwable => runQuiet(socket.close()); throw e
+    case NonFatal(e) => runQuiet(socket.close()); throw e
   }
 
   private def runQuiet(f: => Unit): Unit = try f catch { case NonFatal(_) => () }
@@ -152,33 +152,45 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     msg
   }
 
-  /** Run one simple-protocol query; returns (fields as (name, type
-    * oid), rows as text values with SQL NULL as Scala null). The
-    * response is always drained to ReadyForQuery, so the connection
-    * stays usable after a server-side error (which raises here with
-    * the server's message — pg's E-then-Z discipline).
+  /** [[readMsg]], except that a server which sent an ErrorResponse
+    * and then dropped the link (EOF, or an RST raising
+    * SocketException) reports its error, not the I/O failure.
     */
-  def query(sql: String): (Vector[(String, Int)], Vector[Vector[String]]) = {
-    val body = cstr(sql)
+  private def readAfter(err: String): (Char, Array[Byte]) =
+    try readMsg()
+    catch {
+      case _: java.io.IOException if err != null => throw new RuntimeException(s"pg error: $err")
+    }
+
+  /** Send one simple-protocol statement and stream its result: the
+    * header (RowDescription, or CopyOutResponse for a COPY) is read
+    * before this returns, the rows one frame at a time as the
+    * iterator advances. A server error raises with the server's
+    * message once the response has drained to ReadyForQuery (pg's
+    * E-then-Z discipline), so the connection stays usable after it.
+    */
+  final class Rows private[PgClient] (sql: String)
+      extends Iterator[Vector[String]] {
+    /** RowDescription as (name, type oid); empty for COPY, whose
+      * header carries the column count only.
+      */
+    var fields: Vector[(String, Int)] = Vector.empty
+    /** The result's column count (0 for a statement with no rows). */
+    var width: Int = -1
+    private var err: String = null
+    private var done = false
+    private var pending: Vector[String] = null
+
+    private val body = cstr(sql)
     out.writeByte('Q'); out.writeInt(body.length + 4); out.write(body); out.flush()
-    var fields = Vector.empty[(String, Int)]
-    val rows = Vector.newBuilder[Vector[String]]
-    var err: String = null
-    var done = false
-    while (!done) {
-      val (tpe, p) =
-        try readMsg()
-        catch {
-          // IOException, not just EOFException: a server that sends
-          // ErrorResponse then resets the socket (RST) raises
-          // SocketException — its message must surface the same way
-          case e: java.io.IOException =>
-            if (err != null) throw new RuntimeException(s"pg error: $err") else throw e
-        }
+    while (width < 0 && !done) step()
+    if (width < 0) width = 0
+
+    private def step(): Unit = {
+      val (tpe, p) = readAfter(err)
       tpe match {
         case 'T' =>
-          val bb = ByteBuffer.wrap(p)
-          val n = bb.getShort.toInt
+          val n = ByteBuffer.wrap(p).getShort.toInt
           var off = 2
           val fs = Vector.newBuilder[(String, Int)]
           for (_ <- 0 until n) {
@@ -190,6 +202,8 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
             fs += ((name, oid))
           }
           fields = fs.result()
+          width = n
+        case 'H' => width = ByteBuffer.wrap(p, 1, 2).getShort.toInt // format, then count
         case 'D' =>
           val bb = ByteBuffer.wrap(p)
           val n = bb.getShort.toInt
@@ -198,60 +212,60 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
             val l = bb.getInt
             if (l < 0) vs += null
             else {
-              val b = new Array[Byte](l)
-              bb.get(b)
-              vs += new String(b, UTF_8)
+              vs += new String(p, bb.position(), l, UTF_8)
+              bb.position(bb.position() + l)
             }
           }
-          rows += vs.result()
+          pending = vs.result()
+        case 'd' =>
+          val l = if (p.nonEmpty && p(p.length - 1) == '\n') p.length - 1 else p.length
+          pending = splitCopyLine(new String(p, 0, l, UTF_8))
         case 'E' => err = errorMessage(p)
-        case 'Z' => done = true
-        case _   => () // C/S/N/n/s and anything else: not row data
+        case 'Z' =>
+          done = true
+          if (err != null) throw new RuntimeException(s"pg error: $err")
+        case _ => () // C/S/N/n/s/c and anything else: not row data
       }
     }
-    if (err != null) throw new RuntimeException(s"pg error: $err")
-    (fields, rows.result())
+
+    def hasNext: Boolean = {
+      while (pending == null && !done) step()
+      pending != null
+    }
+
+    def next(): Vector[String] = {
+      if (!hasNext) throw new NoSuchElementException("no more rows")
+      val r = pending
+      pending = null
+      r
+    }
   }
 
-  /** Bulk extraction via `COPY (select) TO STDOUT` (text format): one
-    * CopyData frame per row — a tab-separated escaped line — instead
-    * of a DataRow message carrying a 4-byte length header per FIELD.
-    * This is the wire shape the reference connector's chunked row
-    * streaming optimizes for: on wide rows the per-field framing is
+  /** Stream `sql`'s rows as DataRow text values (SQL NULL as null). */
+  def rows(sql: String): Rows = new Rows(sql)
+
+  /** Stream `selectSql`'s rows through `COPY (select) TO STDOUT`
+    * (text format): one CopyData frame per row — a tab-separated
+    * escaped line — instead of a DataRow message carrying a 4-byte
+    * length header per FIELD. On wide rows the per-field framing is
     * the dominant protocol overhead, and COPY amortizes it to one
-    * frame per row. Fields decode to text identical to [[query]]'s
+    * frame per row. Fields decode to text identical to [[rows]]'
     * (both sides of [[PgWire]] render through one textValue), with
     * `\\N` as SQL NULL.
     */
-  def copyOut(selectSql: String): Vector[Vector[String]] = {
-    val body = cstr(s"COPY ($selectSql) TO STDOUT")
-    out.writeByte('Q'); out.writeInt(body.length + 4); out.write(body); out.flush()
-    val rows = Vector.newBuilder[Vector[String]]
-    var err: String = null
-    var done = false
-    while (!done) {
-      val (tpe, p) =
-        try readMsg()
-        catch {
-          // IOException, not just EOFException: a server that sends
-          // ErrorResponse then resets the socket (RST) raises
-          // SocketException — its message must surface the same way
-          case e: java.io.IOException =>
-            if (err != null) throw new RuntimeException(s"pg error: $err") else throw e
-        }
-      tpe match {
-        case 'd' =>
-          var line = new String(p, UTF_8)
-          if (line.endsWith("\n")) line = line.substring(0, line.length - 1)
-          rows += splitCopyLine(line)
-        case 'E' => err = errorMessage(p)
-        case 'Z' => done = true
-        case _   => () // H/c/C/S/N: framing, not row data
-      }
-    }
-    if (err != null) throw new RuntimeException(s"pg error: $err")
-    rows.result()
+  def copyRows(selectSql: String): Rows = new Rows(s"COPY ($selectSql) TO STDOUT")
+
+  /** Run one simple-protocol query; returns (fields as (name, type
+    * oid), rows as text values with SQL NULL as Scala null).
+    */
+  def query(sql: String): (Vector[(String, Int)], Vector[Vector[String]]) = {
+    val r = rows(sql)
+    val all = r.toVector
+    (r.fields, all)
   }
+
+  /** Bulk extraction via [[copyRows]], collected. */
+  def copyOut(selectSql: String): Vector[Vector[String]] = copyRows(selectSql).toVector
 
   /** Bulk load via `COPY tbl [(cols)] FROM STDIN` (text format) —
     * the WRITE-BACK half of the connector (the reference's is
@@ -287,15 +301,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     while (!ready && !atReady) {
       // a server that errors and then closes without ReadyForQuery
       // must surface ITS message, not a bare EOF (query()'s posture)
-      val (tpe, p) =
-        try readMsg()
-        catch {
-          // IOException, not just EOFException: a server that sends
-          // ErrorResponse then resets the socket (RST) raises
-          // SocketException — its message must surface the same way
-          case e: java.io.IOException =>
-            if (err != null) throw new RuntimeException(s"pg error: $err") else throw e
-        }
+      val (tpe, p) = readAfter(err)
       tpe match {
         case 'G' => ready = true // CopyInResponse
         case 'E' => err = errorMessage(p)
@@ -324,7 +330,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
         if (buf.size() >= 64 * 1024) flushFrame()
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         runQuiet {
           val reason = cstr(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
           out.writeByte('f'); out.writeInt(4 + reason.length); out.write(reason); out.flush()
@@ -341,15 +347,7 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
       // same EOF-after-ErrorResponse posture as the pre-Copy drain: a
       // server that aborted the COPY mid-stream (bad row, constraint)
       // and dropped the link reports its error, not "server closed"
-      val (tpe, p) =
-        try readMsg()
-        catch {
-          // IOException, not just EOFException: a server that sends
-          // ErrorResponse then resets the socket (RST) raises
-          // SocketException — its message must surface the same way
-          case e: java.io.IOException =>
-            if (err != null) throw new RuntimeException(s"pg error: $err") else throw e
-        }
+      val (tpe, p) = readAfter(err)
       tpe match {
         case 'C' =>
           val tag = new String(p, UTF_8).takeWhile(_ != '\u0000')
@@ -363,28 +361,8 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     nRows
   }
 
-  /** Text-format COPY escaping — the exact inverse of
-    * [[splitCopyLine]]'s unescape: backslash first, then the two
-    * separators (tab, newline) and carriage return.
-    */
-  private[graft] def escapeCopy(f: String): String =
-    if (f.indexOf('\\') < 0 && f.indexOf('\t') < 0 &&
-        f.indexOf('\n') < 0 && f.indexOf('\r') < 0) f
-    else {
-      val sb = new StringBuilder(f.length + 8)
-      var i = 0
-      while (i < f.length) {
-        f.charAt(i) match {
-          case '\\' => sb.append("\\\\")
-          case '\t' => sb.append("\\t")
-          case '\n' => sb.append("\\n")
-          case '\r' => sb.append("\\r")
-          case c    => sb.append(c)
-        }
-        i += 1
-      }
-      sb.toString
-    }
+  /** Text-format COPY escaping ([[PgClient.escapeCopy]]). */
+  private[graft] def escapeCopy(f: String): String = PgClient.escapeCopy(f)
 
   /** Raw tab bytes only ever SEPARATE fields (an in-value tab is the
     * two characters `\` `t`), so a top-level split is exact; then
@@ -424,4 +402,31 @@ final class PgClient(host: String, port: Int, timeoutMs: Int = 120000,
     runQuiet { out.writeByte('X'); out.writeInt(4); out.flush() }
     runQuiet(socket.close())
   }
+}
+
+object PgClient {
+
+  /** Text-format COPY escaping in one pass, and only when the field
+    * holds a backslash, tab, LF or CR — the exact inverse of
+    * `splitCopyLine`'s unescape. Shared by the client's COPY IN and
+    * the server's COPY OUT ([[PgWire]]).
+    */
+  def escapeCopy(f: String): String =
+    if (f.indexOf('\\') < 0 && f.indexOf('\t') < 0 &&
+        f.indexOf('\n') < 0 && f.indexOf('\r') < 0) f
+    else {
+      val sb = new StringBuilder(f.length + 8)
+      var i = 0
+      while (i < f.length) {
+        f.charAt(i) match {
+          case '\\' => sb.append("\\\\")
+          case '\t' => sb.append("\\t")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case c    => sb.append(c)
+        }
+        i += 1
+      }
+      sb.toString
+    }
 }

@@ -736,14 +736,7 @@ object PgWire {
     * verbatim).
     */
   private[engine] def copyTextField(v: Any): String =
-    if (v == null) "\\N"
-    else textValue(v).flatMap {
-      case '\\' => "\\\\"
-      case '\t' => "\\t"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case c    => c.toString
-    }
+    if (v == null) "\\N" else PgClient.escapeCopy(textValue(v))
 
   /** Minimal csv quoting: quote when the field contains the
     * delimiter, a quote, or a line break; quotes double inside. An
@@ -813,13 +806,21 @@ object PgWire {
       if (header)
         data(if (csv) cols.map(c => copyCsvField(c)).mkString(",")
              else cols.map(c => copyTextField(c)).mkString("\t"))
+      val sep = if (csv) ',' else '\t'
+      val line = new java.lang.StringBuilder(256)
       val it = df.toLocalIterator()
       while (it.hasNext) {
         val row = it.next()
-        val fields = (0 until row.length).map(i =>
-          if (row.isNullAt(i)) { if (csv) "" else "\\N" }
-          else if (csv) copyCsvField(row.get(i)) else copyTextField(row.get(i)))
-        data(fields.mkString(if (csv) "," else "\t"))
+        line.setLength(0)
+        var i = 0
+        while (i < row.length) {
+          if (i > 0) line.append(sep)
+          if (row.isNullAt(i)) { if (!csv) line.append("\\N") }
+          else line.append(if (csv) copyCsvField(row.get(i)) else copyTextField(row.get(i)))
+          i += 1
+        }
+        line.append('\n')
+        msg(out, 'd')(_.write(line.toString.getBytes(UTF_8)))
         n += 1
       }
     }

@@ -1,31 +1,50 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.PgClient
 
 /** Federated scan over the Postgres v3 WIRE PROTOCOL — the
   * driver-jar-free counterpart of the reference's vendored Postgres
   * provider (`/root/reference/third_party/postgres_provider/src/
-  * postgres_connection.rs:171-223`): schema discovery through a
-  * zero-row probe, range-partitioned parallel reads where EACH SPARK
-  * PARTITION opens its own connection and ships its own
-  * range-predicated, column-pruned SELECT (pushdown travels as SQL
-  * text — the connector's unparse contract; the reference's 4,000-row
-  * chunking and pool become Spark partitions, one connection each),
-  * and text-format row decoding per the RowDescription's type OIDs.
+  * postgres_connection.rs:171-223`) and of its `UnionTableProvider`'s
+  * per-shard pushdown (`union_table_provider.rs:64-97`).
   *
-  * This is the one deliberate RDD use in the repo's source layer:
-  * per-partition imperative socket I/O is exactly the case the
-  * DataFrame API delegates to RDDs for. Everything above the scan
-  * (aggregates, joins) is ordinary Catalyst.
+  * Reads go through one DataSource V2 table, [[PgSource]]:
+  *  - the schema comes from a zero-row probe, taken once per
+  *    (SparkSession, host, port, table, credential) and reused by
+  *    later statements;
+  *  - each scan ships a SELECT of only the columns the query needs,
+  *    with every pushable predicate ([[pushable]]) in its WHERE. Every
+  *    pushed predicate is also evaluated again by Spark after the
+  *    scan, so a shard may over-return rows but never under-return;
+  *  - each Spark partition opens its own connection (the reference's
+  *    pool becomes Spark partitions), optionally one per range of an
+  *    integral key, and decodes the text values by the RowDescription's
+  *    type OIDs straight to Catalyst's internal rows;
+  *  - each scan compares the RowDescription its SELECT returns with
+  *    the columns it was planned with, and fails on a mismatch. A
+  *    mismatch, or any failed remote read, drops the shard table's
+  *    cached schema so the next statement probes again.
   *
-  * At scale: partitions stream independently (no driver fan-in — the
-  * driver sees only the zero-row schema probe and the min/max bounds
-  * scalar), the per-partition predicate makes the remote side do the
-  * filtering, and `numPartitions` sizes wire-level parallelism the
-  * way the reference sizes its pool.
+  * Everything above the scan (aggregates, joins) is ordinary Catalyst.
   */
 object PgFederation {
 
@@ -50,37 +69,33 @@ object PgFederation {
     case _    => StringType
   }
 
-  /** Decode one pg text-format value into the Spark-external type
-    * `createDataFrame` expects for `dt`. Exact for every type the
-    * graded path carries: integer text is exact, double text is the
-    * JVM's own round-trippable rendering, numeric text is plain
-    * decimal digits, bytea is `\x<hex>`.
+  /** Decode one pg text-format value into Catalyst's internal form
+    * for `dt`. Exact for every type the graded path carries: integer
+    * text is exact, double text is the JVM's own round-trippable
+    * rendering, numeric text is plain decimal digits, bytea is
+    * `\x<hex>`.
     */
-  def parse(v: String, dt: DataType): Any = dt match {
+  def decode(v: String, dt: DataType): Any = dt match {
     case BooleanType     => v == "t"
     case ShortType       => v.toShort
     case IntegerType     => v.toInt
     case LongType        => v.toLong
     case FloatType       => v.toFloat
     case DoubleType      => v.toDouble
-    case _: DecimalType  => new java.math.BigDecimal(v)
-    case DateType        => java.sql.Date.valueOf(v)
+    case d: DecimalType  =>
+      val dec = Decimal(new java.math.BigDecimal(v))
+      if (!dec.changePrecision(d.precision, d.scale))
+        throw new ArithmeticException(s"numeric $v does not fit ${d.sql}")
+      dec
+    case DateType        => DateTimeUtils.fromJavaDate(java.sql.Date.valueOf(v))
     case TimestampNTZType =>
-      java.time.LocalDateTime.parse(if (v.contains('T')) v else v.replace(' ', 'T'))
+      DateTimeUtils.localDateTimeToMicros(
+        java.time.LocalDateTime.parse(if (v.contains('T')) v else v.replace(' ', 'T')))
     case BinaryType =>
       require(v.startsWith("\\x"), s"unexpected bytea rendering: $v")
       v.drop(2).grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    case _ => v
+    case _ => UTF8String.fromString(v)
   }
-
-  private def decodeRows(rows: Vector[Vector[String]],
-      fieldTypes: Array[DataType]): Iterator[Row] =
-    rows.iterator.map { r =>
-      Row.fromSeq(r.zip(fieldTypes).map {
-        case (null, _) => null
-        case (v, dt)   => parse(v, dt)
-      })
-    }
 
   /** Render one Spark-external value as pg text format — the inverse
     * of [[parse]] (and value-identical to the server's own rendering,
@@ -203,80 +218,385 @@ object PgFederation {
 
   /** Whole-table single-connection read — the CLI federate leg shape
     * (the reference unions whole remote shard tables,
-    * `csvb_engine/src/lib.rs:134-188`): schema by the zero-row probe,
-    * then ONE partition whose single connection streams the full
-    * `SELECT *`. Range-partition with [[pgTable]] when a partition
-    * column exists; this form is for shards small enough that the
-    * union itself is the parallelism (one task per shard leg).
+    * `csvb_engine/src/lib.rs:134-188`): one partition, whose single
+    * connection ships the pruned, predicated SELECT the query plans.
+    * Range-partition with [[pgTable]] when a partition column exists;
+    * this form is for shards small enough that the union itself is
+    * the parallelism (one task per shard leg).
     */
   def pgTableWhole(spark: SparkSession, host: String, port: Int, table: String,
-      timeoutMs: Int = 120000, password: Option[String] = None): DataFrame = {
-    val probe = new PgClient(host, port, timeoutMs, password)
-    val fields =
-      try probe.query(s"SELECT * FROM $table WHERE 1 = 0")._1
-      finally probe.close()
-    val schema = StructType(fields.map { case (n, oid) => StructField(n, sparkType(oid)) })
-    val fieldTypes = schema.fields.map(_.dataType)
-    val rdd = spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
-      val c = new PgClient(host, port, timeoutMs, password)
-      try decodeRows(c.query(s"SELECT * FROM $table")._2, fieldTypes)
-      finally c.close()
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+      timeoutMs: Int = 120000, password: Option[String] = None): DataFrame =
+    read(spark, PgOpts(host, port, table, password, timeoutMs))
 
-  /** Read `table` from a v3 server as a DataFrame, split into
-    * `numPartitions` ranges of the integral `partitionCol` (bounds
-    * discovered remotely), with `columns` pruned and `where` pushed
-    * into EVERY partition's remote query alongside its range
-    * predicate.
+  /** Read `table` from a v3 server as a DataFrame of `columns`, split
+    * into `numPartitions` ranges of the integral `partitionCol`
+    * (bounds discovered remotely when the scan is planned), with
+    * `where` shipped inside EVERY partition's remote query alongside
+    * its range predicate. `viaCopy` reads each partition through
+    * `COPY (select) TO STDOUT` instead of DataRow framing.
     */
   def pgTable(spark: SparkSession, host: String, port: Int, table: String,
       columns: Seq[String], partitionCol: String, numPartitions: Int,
       where: Option[String] = None, timeoutMs: Int = 120000,
       password: Option[String] = None, viaCopy: Boolean = false): DataFrame = {
     require(columns.nonEmpty && numPartitions >= 1, "need columns and >= 1 partitions")
-    val colSql = columns.mkString(", ")
-    // driver-side: one zero-row schema probe + one bounds scalar —
-    // never data
-    val probe = new PgClient(host, port, timeoutMs, password)
-    val (fields, bounds) =
-      try {
-        val (fs, _) = probe.query(s"SELECT $colSql FROM $table WHERE 1 = 0")
-        val (_, b) = probe.query(
-          s"SELECT min($partitionCol) AS lo, max($partitionCol) AS hi FROM $table")
-        (fs, b)
-      } finally probe.close()
-    val schema = StructType(fields.map { case (n, oid) => StructField(n, sparkType(oid)) })
-    val fieldTypes = schema.fields.map(_.dataType)
-    if (bounds.isEmpty || bounds.head(0) == null)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    // BigInt range math: `max + 1` at Long.MaxValue and `span * i` at
-    // wide id spans (snowflake/nanosecond keys) both overflow Long —
-    // overflowed endpoints would SILENTLY drop ranges via the h > l
-    // filter, i.e. missing rows, not an error
-    val lo = BigInt(bounds.head(0).toLong)
-    val hi = BigInt(bounds.head(1).toLong) + 1 // exclusive upper
-    val span = hi - lo
-    val ranges = (0 until numPartitions).map { i =>
-      (lo + span * i / numPartitions, lo + span * (i + 1) / numPartitions)
-    }.filter { case (l, h) => h > l }
-    val extra = where.map(w => s" AND ($w)").getOrElse("")
-    val rdd = spark.sparkContext.parallelize(ranges.indices, math.max(ranges.size, 1))
-      .flatMap { i =>
-        val (l, h) = ranges(i)
-        // min/max ignore NULLs, so a NULL-keyed row falls in no
-        // range: the FIRST partition carries the IS NULL leg (the
-        // Spark JDBC partitioned-reader convention)
-        val nullLeg = if (i == 0) s" OR $partitionCol IS NULL" else ""
-        val remote =
-          s"SELECT $colSql FROM $table WHERE ($partitionCol >= $l AND $partitionCol < $h$nullLeg)$extra"
-        val c = new PgClient(host, port, timeoutMs, password)
-        // viaCopy: one CopyData frame per row instead of per-field
-        // DataRow framing — the bulk branch; text values identical
-        try decodeRows(if (viaCopy) c.copyOut(remote) else c.query(remote)._2, fieldTypes)
-        finally c.close()
-      }
-    spark.createDataFrame(rdd, schema)
+    read(spark, PgOpts(host, port, table, password, timeoutMs, Some(partitionCol),
+      numPartitions, where, viaCopy)).select(columns.map(col): _*)
   }
+
+  private def read(spark: SparkSession, o: PgOpts): DataFrame =
+    spark.read.format(classOf[PgSource].getName)
+      .schema(schemaFor(spark, o))
+      .options(o.options)
+      .load()
+
+  /** The zero-row schema probe: one connection, one statement. */
+  private[sources] def probe(o: PgOpts): StructType = {
+    val c = o.connect()
+    val fields =
+      try c.query(s"SELECT * FROM ${o.table} WHERE 1 = 0")._1
+      finally c.close()
+    StructType(fields.map { case (n, oid) => StructField(n, sparkType(oid)) })
+  }
+
+  // ---- schema reuse -------------------------------------------------
+
+  /** A probed schema's key within one session. The credential is kept
+    * as its digest: a different password is a different entry (it
+    * may not even reach the table), and the secret itself is never
+    * held.
+    */
+  private final case class Probed(host: String, port: Int, table: String, credential: String)
+
+  private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Probed, StructType]]()
+
+  /** The (host, port, table) legs the current thread's [[statement]]
+    * has read, if it runs inside one.
+    */
+  private val statementReads = new ThreadLocal[mutable.Set[(String, Int, String)]]()
+
+  private def schemaFor(spark: SparkSession, o: PgOpts): StructType = {
+    val key = Probed(o.host, o.port, o.table, o.password.fold("") { pw =>
+      java.security.MessageDigest.getInstance("SHA-256").digest(pw.getBytes(UTF_8))
+        .map("%02x".format(_)).mkString
+    })
+    Option(statementReads.get).foreach(_ += ((o.host, o.port, o.table)))
+    val cache = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[Probed, StructType]()))
+    Option(cache.get(key)).getOrElse {
+      val probed = probe(o)
+      cache.put(key, probed)
+      probed
+    }
+  }
+
+  /** Drop every session's cached schema of one shard table, so the
+    * next statement that reads it probes again. Scan tasks call this
+    * on a failed remote read; they run in the driver's JVM in this
+    * repo's local sessions, and on a cluster [[statement]] still
+    * drops it on the driver.
+    */
+  def forget(host: String, port: Int, table: String): Unit =
+    schemas.synchronized {
+      schemas.values.forEach(_.keySet.removeIf(k => k.host == host && k.port == port && k.table == table))
+    }
+
+  /** Run one statement over wire legs: if it fails, for any reason —
+    * a schema mismatch in a scan, or an analysis error on a column
+    * the cached schema lacks — every shard table it read drops its
+    * cached schema, and the next statement probes again.
+    */
+  def statement[T](body: => T): T = {
+    val outer = statementReads.get
+    val reads = mutable.Set.empty[(String, Int, String)]
+    statementReads.set(reads)
+    try body
+    catch {
+      case NonFatal(e) =>
+        reads.foreach { case (h, p, t) => forget(h, p, t) }
+        throw e
+    }
+    finally statementReads.set(outer)
+  }
+
+  // ---- predicate pushdown -------------------------------------------
+
+  /** PostgreSQL's reserved key words: unquoted, they do not read as
+    * column names.
+    */
+  private val Reserved = Set("all", "analyse", "analyze", "and", "any", "array", "as", "asc",
+    "asymmetric", "authorization", "binary", "both", "case", "cast", "check", "collate",
+    "collation", "column", "concurrently", "constraint", "create", "cross", "current_catalog",
+    "current_date", "current_role", "current_schema", "current_time", "current_timestamp",
+    "current_user", "default", "deferrable", "desc", "distinct", "do", "else", "end", "except",
+    "false", "fetch", "for", "foreign", "freeze", "from", "full", "grant", "group", "having",
+    "ilike", "in", "initially", "inner", "intersect", "into", "is", "isnull", "join", "lateral",
+    "leading", "left", "like", "limit", "localtime", "localtimestamp", "natural", "not",
+    "notnull", "null", "offset", "on", "only", "or", "order", "outer", "overlaps", "placing",
+    "primary", "references", "returning", "right", "select", "session_user", "similar",
+    "some", "symmetric", "table", "tablesample", "then", "to", "trailing", "true", "union",
+    "unique", "user", "using", "variadic", "verbose", "when", "where", "window", "with")
+
+  /** A column name that reads the same unquoted on PostgreSQL (which
+    * folds unquoted names to lower case) and on a Spark SQL parser
+    * (which reads `"x"` as a string literal, so nothing can be quoted).
+    */
+  private[sources] def plainName(n: String): Boolean =
+    n.matches("[a-z_][a-z0-9_]*") && !Reserved(n)
+
+  private def ordered(t: DataType): Boolean = t match {
+    case ShortType | IntegerType | LongType | BooleanType | DateType => true
+    case _ => false
+  }
+
+  private def literal(v: Any, t: DataType): Option[String] = (v, t) match {
+    case (_: java.lang.Short | _: java.lang.Integer | _: java.lang.Long,
+        ShortType | IntegerType | LongType) => Some(v.toString)
+    case (b: java.lang.Boolean, BooleanType) => Some(if (b) "TRUE" else "FALSE")
+    case (_: java.sql.Date | _: java.time.LocalDate, DateType) =>
+      Some(v.toString).filter(_.matches("\\d{4}-\\d{2}-\\d{2}")).map(d => s"DATE '$d'")
+    case (s: String, StringType) if !s.contains('\\') => Some("'" + s.replace("'", "''") + "'")
+    case _ => None
+  }
+
+  /** `f` as SQL text that PostgreSQL and this repo's own pgwire server
+    * (which parses Spark SQL) evaluate alike, or None to leave it to
+    * Spark: comparisons, IN, IS [NOT] NULL, AND, OR and NOT on
+    * integral, boolean and date columns with literals of those types;
+    * `=` and IN on strings whose literals hold no backslash (Spark SQL
+    * reads a backslash as an escape, PostgreSQL does not); only on
+    * [[plainName]] columns. Doubles, decimals and timestamps stay in
+    * Spark, and so does every string ordering (collations differ).
+    */
+  private[sources] def pushable(f: Filter, types: Map[String, DataType]): Option[String] = {
+    def column(a: String, ok: DataType => Boolean): Option[DataType] =
+      types.get(a).filter(t => plainName(a) && ok(t))
+    def equality(t: DataType) = ordered(t) || t == StringType
+    def cmp(a: String, op: String, v: Any) =
+      column(a, ordered).flatMap(literal(v, _)).map(l => s"$a $op $l")
+    f match {
+      case EqualTo(a, v) => column(a, equality).flatMap(literal(v, _)).map(l => s"$a = $l")
+      case GreaterThan(a, v)        => cmp(a, ">", v)
+      case GreaterThanOrEqual(a, v) => cmp(a, ">=", v)
+      case LessThan(a, v)           => cmp(a, "<", v)
+      case LessThanOrEqual(a, v)    => cmp(a, "<=", v)
+      case In(a, vs) if vs.nonEmpty =>
+        column(a, equality).flatMap { t =>
+          val ls = vs.toSeq.map(literal(_, t))
+          if (ls.forall(_.isDefined)) Some(ls.flatten.mkString(s"$a IN (", ", ", ")")) else None
+        }
+      case IsNull(a)    => column(a, ordered).map(_ => s"$a IS NULL")
+      case IsNotNull(a) => column(a, ordered).map(_ => s"$a IS NOT NULL")
+      case And(l, r) => for (x <- pushable(l, types); y <- pushable(r, types)) yield s"($x) AND ($y)"
+      case Or(l, r)  => for (x <- pushable(l, types); y <- pushable(r, types)) yield s"($x) OR ($y)"
+      case Not(c)    => pushable(c, types).map(x => s"NOT ($x)")
+      case _ => None
+    }
+  }
+}
+
+/** Where one shard table lives and how to read it — the source's
+  * options. `toString` names the table, never the password.
+  */
+private[sources] final case class PgOpts(host: String, port: Int, table: String,
+    password: Option[String], timeoutMs: Int, partitionColumn: Option[String] = None,
+    numPartitions: Int = 1, where: Option[String] = None, viaCopy: Boolean = false) {
+  def connect(): PgClient = new PgClient(host, port, timeoutMs, password)
+  override def toString: String = s"pg://$host:$port/$table"
+
+  /** The inverse of `PgOpts(options)`. */
+  def options: Map[String, String] =
+    Map("host" -> host, "port" -> port.toString, "table" -> table,
+      "timeoutMs" -> timeoutMs.toString, "numPartitions" -> numPartitions.toString,
+      "viaCopy" -> viaCopy.toString) ++ password.map("password" -> _) ++
+      partitionColumn.map("partitionColumn" -> _) ++ where.map("where" -> _)
+}
+
+private[sources] object PgOpts {
+  def apply(m: java.util.Map[String, String]): PgOpts = {
+    val o = new CaseInsensitiveStringMap(m)
+    def get(k: String) = Option(o.get(k))
+    def need(k: String) =
+      get(k).getOrElse(throw new IllegalArgumentException(s"pg source needs option $k"))
+    PgOpts(need("host"), need("port").toInt, need("table"), get("password"),
+      get("timeoutMs").fold(120000)(_.toInt), get("partitionColumn"),
+      get("numPartitions").fold(1)(_.toInt), get("where"), get("viaCopy").contains("true"))
+  }
+}
+
+/** The DataSource V2 entry point: `spark.read.format(classOf[PgSource]
+  * .getName)` with options host, port, table and optionally password,
+  * timeoutMs, partitionColumn + numPartitions, where, viaCopy. A
+  * given schema is taken as probed ([[PgFederation.pgTable]] and
+  * [[PgFederation.pgTableWhole]] pass the session's cached one);
+  * without one the source probes.
+  */
+final class PgSource extends TableProvider {
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    PgFederation.probe(PgOpts(options))
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    new PgTable(schema, PgOpts(properties))
+}
+
+private[sources] final class PgTable(full: StructType, o: PgOpts) extends Table with SupportsRead {
+  override def name(): String = o.toString
+  override def schema(): StructType = full
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new PgScanBuilder(full, o)
+}
+
+private[sources] final class PgScanBuilder(full: StructType, o: PgOpts) extends ScanBuilder
+    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
+  private val types = full.fields.map(f => f.name -> f.dataType).toMap
+  private var required = full
+  private var pushed = Array.empty[(Filter, String)]
+
+  override def pruneColumns(s: StructType): Unit = required = s
+
+  /** Pushes what [[PgFederation.pushable]] renders, and hands every
+    * filter back for Spark to evaluate after the scan as well.
+    */
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushed = filters.flatMap(f => PgFederation.pushable(f, types).map(f -> _))
+    filters
+  }
+
+  override def pushedFilters(): Array[Filter] = pushed.map(_._1)
+
+  override def build(): Scan = new PgScan(full, required, pushed.toSeq.map(_._2), o)
+}
+
+/** One remote SELECT per partition. Its select list is the required
+  * columns when every one is a [[PgFederation.plainName]], else `*`
+  * projected locally; `1` when the query needs no column (count(*)).
+  */
+private[sources] final class PgScan(full: StructType, required: StructType,
+    pushed: Seq[String], o: PgOpts) extends Scan with Batch {
+  private val plain = required.fieldNames.forall(PgFederation.plainName)
+  private val returned = if (plain) required else full
+  private val selectList =
+    if (required.isEmpty) "1" else if (plain) required.fieldNames.mkString(", ") else "*"
+
+  private def sql(range: Option[String]): String = {
+    val conds = range.toSeq ++ o.where ++ pushed
+    s"SELECT $selectList FROM ${o.table}" +
+      (if (conds.isEmpty) "" else conds.map(c => s"($c)").mkString(" WHERE ", " AND ", ""))
+  }
+
+  override def readSchema(): StructType = required
+  override def description(): String =
+    sql(None) + o.partitionColumn.fold("")(k => s" in ${o.numPartitions} ranges of $k")
+  override def toBatch: Batch = this
+  override def createReaderFactory(): PartitionReaderFactory = PgReaderFactory
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  // planned once per scan: Spark asks each copy of the scan's plan node
+  // (two per execution), and the bounds are a remote statement
+  private lazy val partitions: Array[InputPartition] = {
+    def part(range: Option[String]): InputPartition = PgPart(sql(range), o,
+      if (required.isEmpty) Array.empty else returned.fields.map(f => (f.name, f.dataType)),
+      required.fieldNames.map(returned.fieldIndex), required.fields.map(_.dataType))
+    o.partitionColumn match {
+      case None => Array(part(None))
+      case Some(k) =>
+        // driver-side: one bounds scalar, never data
+        val c = o.connect()
+        val bounds =
+          try c.query(s"SELECT min($k) AS lo, max($k) AS hi FROM ${o.table}")._2
+          finally c.close()
+        if (bounds.isEmpty || bounds.head(0) == null) Array.empty
+        else {
+          // BigInt range math: `max + 1` at Long.MaxValue and `span * i`
+          // at wide id spans (snowflake/nanosecond keys) both overflow
+          // Long — overflowed endpoints would SILENTLY drop ranges via
+          // the h > l filter, i.e. missing rows, not an error
+          val lo = BigInt(bounds.head(0).toLong)
+          val hi = BigInt(bounds.head(1).toLong) + 1 // exclusive upper
+          val span = hi - lo
+          val n = o.numPartitions
+          val ranges = (0 until n).map { i =>
+            (lo + span * i / n, lo + span * (i + 1) / n)
+          }.filter { case (l, h) => h > l }
+          // min/max ignore NULLs, so a NULL-keyed row falls in no range:
+          // the FIRST partition carries the IS NULL leg (the Spark JDBC
+          // partitioned-reader convention)
+          ranges.zipWithIndex.map { case ((l, h), i) =>
+            part(Some(s"$k >= $l AND $k < $h" + (if (i == 0) s" OR $k IS NULL" else "")))
+          }.toArray
+        }
+    }
+  }
+}
+
+/** One partition's remote SELECT; `expect` is the RowDescription it
+  * was planned against (empty: nothing to check), `pick` each output
+  * column's position in the returned row.
+  */
+private[sources] final case class PgPart(sql: String, o: PgOpts,
+    expect: Array[(String, DataType)], pick: Array[Int], types: Array[DataType])
+    extends InputPartition {
+
+  def check(r: PgClient#Rows): Unit = if (expect.nonEmpty) {
+    def show(cs: Seq[(String, DataType)]) =
+      cs.map { case (n, t) => s"$n ${t.sql}" }.mkString("[", ", ", "]")
+    // COPY OUT's header carries the column count only
+    val got =
+      if (o.viaCopy) None else Some(r.fields.map { case (n, oid) => (n, PgFederation.sparkType(oid)) })
+    if (!got.fold(r.width == expect.length)(_ == expect.toSeq))
+      throw new IllegalStateException(s"shard table $o changed since its schema was probed: " +
+        s"planned ${show(expect.toSeq)}, the shard returns " +
+        got.fold(s"${r.width} columns")(show) + "; the next statement probes it again")
+  }
+
+  def decode(v: Vector[String]): InternalRow = {
+    val out = new Array[Any](pick.length)
+    var i = 0
+    while (i < pick.length) {
+      val s = v(pick(i))
+      out(i) = if (s == null) null else PgFederation.decode(s, types(i))
+      i += 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  override def toString: String = s"PgPart($o: $sql)"
+}
+
+private[sources] object PgReaderFactory extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new PgReader(p.asInstanceOf[PgPart])
+}
+
+/** Streams one partition over its own connection. A failed remote read
+  * (a schema mismatch included) drops the table's cached schema.
+  */
+private[sources] final class PgReader(p: PgPart) extends PartitionReader[InternalRow] {
+  private val client = p.o.connect()
+  private var row: InternalRow = _
+
+  private def guarded[T](f: => T): T =
+    try f
+    catch {
+      case NonFatal(e) =>
+        PgFederation.forget(p.o.host, p.o.port, p.o.table)
+        throw e
+    }
+
+  private val rows =
+    try guarded {
+      val r = if (p.o.viaCopy) client.copyRows(p.sql) else client.rows(p.sql)
+      p.check(r)
+      r
+    } catch { case NonFatal(e) => client.close(); throw e }
+
+  override def next(): Boolean = guarded(rows.hasNext && { row = p.decode(rows.next()); true })
+  override def get(): InternalRow = row
+  override def close(): Unit = client.close()
 }

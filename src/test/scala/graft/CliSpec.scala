@@ -457,6 +457,197 @@ class CliSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  /** A loopback proxy in front of a pgwire server that counts the
+    * simple-protocol statements ('Q' messages) clients send through it.
+    */
+  private final class CountingProxy(target: Int) extends AutoCloseable {
+    private val listener = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val port: Int = listener.getLocalPort
+    val statements = new java.util.concurrent.atomic.AtomicInteger(0)
+
+    private def daemon(f: => Unit): Unit = {
+      val t = new Thread(() => try f catch { case _: java.io.IOException => () })
+      t.setDaemon(true)
+      t.start()
+    }
+
+    daemon {
+      while (true) {
+        val client = listener.accept()
+        val upstream = new java.net.Socket("127.0.0.1", target)
+        daemon(try upstream.getInputStream.transferTo(client.getOutputStream) finally client.close())
+        daemon {
+          val in = new java.io.DataInputStream(client.getInputStream)
+          val out = new java.io.DataOutputStream(upstream.getOutputStream)
+          def relay(tpe: Int): Unit = {
+            val len = in.readInt()
+            val body = new Array[Byte](len - 4)
+            in.readFully(body)
+            if (tpe >= 0) out.writeByte(tpe)
+            out.writeInt(len); out.write(body); out.flush()
+          }
+          try {
+            relay(-1) // the startup message carries no type byte
+            var tpe = in.read()
+            while (tpe >= 0) {
+              if (tpe == 'Q') statements.incrementAndGet()
+              relay(tpe)
+              tpe = in.read()
+            }
+          } finally upstream.close()
+        }
+      }
+    }
+
+    override def close(): Unit = listener.close()
+  }
+
+  /** The `BatchScan` lines of a collected frame's executed plan
+    * (adaptive plans print their final and initial trees).
+    */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.toString.linesIterator.filter(_.contains("BatchScan")).toSeq
+
+  /** A small parquet table of every pushdown-relevant type, registered
+    * in the shared catalog the in-repo pgwire servers read.
+    */
+  private def pushdownFixture(table: String): Unit = {
+    val dir = Files.createTempDirectory("graft-fedpd")
+    spark.sql("""SELECT * FROM VALUES
+        (CAST(1 AS BIGINT), 10, 1.5D, 'a', DATE'2024-01-01', true, 1),
+        (CAST(2 AS BIGINT), 20, 2.5D, 'b', DATE'2024-02-01', false, 2),
+        (CAST(3 AS BIGINT), 10, 3.5D, 'a\\b', DATE'2024-03-01', true, 3),
+        (CAST(4 AS BIGINT), 30, 4.5D, 'c', CAST(NULL AS DATE), NULL, 4),
+        (CAST(5 AS BIGINT), 10, CAST(NULL AS DOUBLE), 'a', DATE'2024-05-01', false, 5)
+      AS t(id, k, d, s, dt, flag, Mixed)""")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/p")
+    graft.engine.Serve.registerShared(spark, table, Seq(s"$dir/p"), "parquet")
+  }
+
+  /** [[pushdownFixture]] served by two in-repo pgwire shards (both read
+    * the shared catalog, so the federated union holds every row twice).
+    */
+  private def withTwoShards(table: String)(f: (Int, Int) => Unit): Unit = {
+    pushdownFixture(table)
+    val a = graft.engine.PgWire.start(spark, 0)
+    val b = graft.engine.PgWire.start(spark, 0)
+    try f(a.boundPort, b.boundPort) finally { a.close(); b.close() }
+  }
+
+  test("federate --pg ships the pruned columns and pushed predicates; answers equal an unpushed read") {
+    withTwoShards("fedpd_t") { (pa, pb) =>
+      val local = spark.table("fedpd_t").unionAll(spark.table("fedpd_t"))
+      local.createOrReplaceTempView("fedpd_local")
+      def federate(view: String, where: String): Unit = {
+        val q = s"SELECT k, count(*) AS n, sum(id) AS si FROM $view WHERE $where GROUP BY k ORDER BY k"
+        val (code, out) = capture("federate", "--pg", s"127.0.0.1:$pa", "--pg", s"127.0.0.1:$pb",
+          "--dbtable", "fedpd_t", "--table-name", view, q)
+        assert(code === 0, out)
+        assert(out.trim === Core.pretty(spark.sql(q.replace(view, "fedpd_local")), 20), where)
+      }
+      // pushed: an integral range, a date comparison, boolean, string = and IN
+      val pushed = Seq(
+        "id BETWEEN 2 AND 4" -> Seq("(id >= 2)", "(id <= 4)"),
+        "dt >= DATE'2024-02-01' AND flag = false" -> Seq("(dt >= DATE '2024-02-01')", "flag = "),
+        "s = 'a' AND k IN (10, 30)" -> Seq("(s = 'a')", "(k IN (10, 30))"),
+        "NOT (k = 10) OR id IS NULL" -> Seq("(NOT (k = 10)) OR (id IS NULL)"))
+      for (((where, sqls), i) <- pushed.zipWithIndex) {
+        federate(s"fedpd_$i", where)
+        val plan = spark.sql(s"SELECT k, count(*), sum(id) FROM fedpd_$i WHERE $where GROUP BY k")
+        plan.collect()
+        val legs = scans(plan)
+        assert(Seq(pa, pb).forall(p => legs.exists(_.contains(s":$p/fedpd_t["))), legs)
+        legs.foreach { l =>
+          sqls.foreach(p => assert(l.contains(p), s"$p not pushed: $l"))
+          // only the columns the query reads cross the wire
+          val cols = l.substring(l.indexOf("SELECT ") + 7, l.indexOf(" FROM fedpd_t")).split(", ").toSet
+          assert(cols.subsetOf(Set("id", "k", "dt", "flag", "s")) && cols.contains("k") && cols.contains("id"), l)
+        }
+      }
+      // left to Spark: a string range, a backslash literal, a double
+      // comparison and a mixed-case column — answers still right
+      val kept = Seq("s > 'a'", "s = 'a\\\\b'", "d > 2.0", "Mixed = 3")
+      for ((where, i) <- kept.zipWithIndex) {
+        federate(s"fedkp_$i", where)
+        val plan = spark.sql(s"SELECT k, count(*), sum(id) FROM fedkp_$i WHERE $where GROUP BY k")
+        plan.collect()
+        val legs = scans(plan)
+        assert(Seq(pa, pb).forall(p => legs.exists(_.contains(s":$p/fedpd_t["))), legs)
+        legs.foreach(l => assert(!l.contains("WHERE"), s"$where was pushed: $l"))
+      }
+      // the mixed-case column forces `SELECT *`, projected locally
+      val mixed = spark.table("fedkp_3").select("Mixed").filter("Mixed > 1")
+      mixed.collect()
+      assert(scans(mixed).forall(_.contains("SELECT * FROM fedpd_t")), scans(mixed))
+    }
+  }
+
+  test("federate --pg probes each shard's schema once per session: a second statement sends one " +
+      "remote statement per shard") {
+    withTwoShards("fedreuse_t") { (pa, pb) =>
+      val (ca, cb) = (new CountingProxy(pa), new CountingProxy(pb))
+      try {
+        def run(): Unit = {
+          val (code, out) = capture("federate", "--pg", s"127.0.0.1:${ca.port}",
+            "--pg", s"127.0.0.1:${cb.port}", "--dbtable", "fedreuse_t", "--table-name", "fr",
+            "SELECT count(*) AS n FROM fr WHERE k = 10")
+          assert(code === 0, out)
+          assert(out.contains("| 6 "), out)
+        }
+        run()
+        assert((ca.statements.get, cb.statements.get) === ((2, 2))) // probe + SELECT
+        run()
+        assert((ca.statements.get, cb.statements.get) === ((3, 3))) // SELECT only
+      } finally { ca.close(); cb.close() }
+    }
+  }
+
+  test("federate --pg: a changed shard schema fails one statement, and the next probes again") {
+    val srv = graft.engine.PgWire.start(spark, 0)
+    def view(cols: String): Unit =
+      spark.sql(s"CREATE OR REPLACE GLOBAL TEMP VIEW fedmm_v AS SELECT $cols FROM VALUES (1), (2), (3) AS t(x)")
+    def run(sql: String): (Int, String) = capture("federate", "--pg", s"127.0.0.1:${srv.boundPort}",
+      "--dbtable", "global_temp.fedmm_v", "--table-name", "fm", sql)
+    try {
+      view("CAST(x AS INT) AS a")
+      assert(run("SELECT sum(a) AS s FROM fm")._2.contains("| 6 "))
+      // a column changes type: the scan's RowDescription disagrees with the plan
+      view("CAST(x AS BIGINT) * 10 AS a")
+      val e = intercept[Exception](run("SELECT sum(a) AS s FROM fm"))
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(msg.contains("pg://127.0.0.1:") && msg.contains("/global_temp.fedmm_v changed"), msg)
+      assert(msg.contains("planned [a INT]") && msg.contains("returns [a BIGINT]"), msg)
+      assert(run("SELECT sum(a) AS s FROM fm")._2.contains("| 60 "))
+      // a column is added and then referenced: the cached schema lacks it
+      view("CAST(x AS BIGINT) * 10 AS a, x + 100 AS b")
+      intercept[Exception](run("SELECT sum(b) AS s FROM fm"))
+      assert(run("SELECT sum(b) AS s FROM fm")._2.contains("| 306 "))
+    } finally srv.close()
+  }
+
+  test("federate --pg: the shard password appears in no explain output") {
+    val secret = "pd-secret-7f3a"
+    pushdownFixture("fedpw_t")
+    val srv = graft.engine.PgWire.start(spark, 0, password = Some(secret))
+    try {
+      val q = "SELECT k, count(*) AS n FROM fpw WHERE id > 1 GROUP BY k"
+      val args = Seq("federate", "--pg", s"127.0.0.1:${srv.boundPort}",
+        "--pg-shard-password", secret, "--dbtable", "fedpw_t", "--table-name", "fpw")
+      for (prefix <- Seq("EXPLAIN ", "EXPLAIN EXTENDED ", "EXPLAIN FORMATTED ", "EXPLAIN ANALYZE ")) {
+        val (code, out) = capture(args :+ (prefix + q): _*)
+        assert(code === 0, out)
+        assert(out.contains("fedpw_t") && !out.contains(secret), out)
+      }
+      val df = spark.sql(q)
+      df.collect()
+      for (mode <- Seq("simple", "extended", "codegen", "cost", "formatted")) {
+        val text = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString(mode))
+        assert(text.contains("BatchScan") && !text.contains(secret), text)
+      }
+    } finally srv.close()
+  }
+
   test("--memory-cap maps the reference's memory-pool flag onto the broadcast threshold") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
