@@ -3,6 +3,7 @@ package graft
 import java.io.PrintStream
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 import graft.engine.Core
 
@@ -93,10 +94,10 @@ object Cli {
       |connection per shard; --pg-shard-password authenticates to the
       |shards via SCRAM-SHA-256). A --pg leg ships only the columns
       |the query reads and the predicates both engines evaluate alike
-      |(integral, boolean and date comparisons; string = and IN); Spark
-      |evaluates every predicate again. Each shard's schema is probed
-      |once per session and reused; a statement that finds it changed
-      |fails, and the next one probes again. Column reordering and
+      |(integral, boolean and date comparisons; string = and IN, not
+      |under NOT); Spark evaluates every predicate again. Each shard's
+      |schema is probed once per session and reused; a statement that
+      |finds it changed fails, and the next one probes again. Column reordering and
       |nullability differences between shards are accepted (resolved by name);
       |--strict-schema restores the reference's identical-schema bail.
       |With "<SQL>" it answers inline, without it serves the federated
@@ -418,28 +419,27 @@ object Cli {
     // surviving union paths (inline answer, wire-leg serve) build the
     // same unioned frame; the JDBC-only serve path instead bails
     // inside registerSharedJdbc over the registered tables
+    // a bail or a failed statement may rest on a stale cached schema
+    // (a changed type, a newly added column): the next one probes again
+    def forgetLegs(): Unit =
+      pgLegs.foreach { case (h, p) => graft.sources.PgFederation.forget(h, p, dbtable) }
     def unionOrBail(): Option[org.apache.spark.sql.DataFrame] =
       try Some(graft.engine.Federation.unionShards(allLegs, strict))
       catch {
         case e: IllegalArgumentException =>
-          // the bail may rest on a stale cached schema: probe again next time
-          pgLegs.foreach { case (h, p) => graft.sources.PgFederation.forget(h, p, dbtable) }
+          forgetLegs()
           out.println(e.getMessage)
           None
       }
     query match {
       case Some(sql) =>
-        // one statement: if it fails, the wire legs it read drop their
-        // cached schemas, so the next statement probes them again
-        graft.sources.PgFederation.statement {
-          unionOrBail() match {
-            case None => 2
-            case Some(union) =>
-              union.createOrReplaceTempView(tableName)
-              out.println(Core.pretty(Core.execute(spark, sql), maxRows))
-              0
-          }
-        }
+        try unionOrBail() match {
+          case None => 2
+          case Some(union) =>
+            union.createOrReplaceTempView(tableName)
+            out.println(Core.pretty(Core.execute(spark, sql), maxRows))
+            0
+        } catch { case NonFatal(e) => forgetLegs(); throw e }
       case None if pgLegs.isEmpty =>
         try graft.engine.Serve.registerSharedJdbc(spark, tableName, urls, dbtable, strict)
         catch {

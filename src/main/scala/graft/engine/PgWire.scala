@@ -806,21 +806,13 @@ object PgWire {
       if (header)
         data(if (csv) cols.map(c => copyCsvField(c)).mkString(",")
              else cols.map(c => copyTextField(c)).mkString("\t"))
-      val sep = if (csv) ',' else '\t'
-      val line = new java.lang.StringBuilder(256)
       val it = df.toLocalIterator()
       while (it.hasNext) {
         val row = it.next()
-        line.setLength(0)
-        var i = 0
-        while (i < row.length) {
-          if (i > 0) line.append(sep)
-          if (row.isNullAt(i)) { if (!csv) line.append("\\N") }
-          else line.append(if (csv) copyCsvField(row.get(i)) else copyTextField(row.get(i)))
-          i += 1
-        }
-        line.append('\n')
-        msg(out, 'd')(_.write(line.toString.getBytes(UTF_8)))
+        val fields = (0 until row.length).map(i =>
+          if (row.isNullAt(i)) { if (csv) "" else "\\N" }
+          else if (csv) copyCsvField(row.get(i)) else copyTextField(row.get(i)))
+        data(fields.mkString(if (csv) "," else "\t"))
         n += 1
       }
     }

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -270,17 +269,11 @@ object PgFederation {
 
   private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Probed, StructType]]()
 
-  /** The (host, port, table) legs the current thread's [[statement]]
-    * has read, if it runs inside one.
-    */
-  private val statementReads = new ThreadLocal[mutable.Set[(String, Int, String)]]()
-
   private def schemaFor(spark: SparkSession, o: PgOpts): StructType = {
     val key = Probed(o.host, o.port, o.table, o.password.fold("") { pw =>
       java.security.MessageDigest.getInstance("SHA-256").digest(pw.getBytes(UTF_8))
         .map("%02x".format(_)).mkString
     })
-    Option(statementReads.get).foreach(_ += ((o.host, o.port, o.table)))
     val cache = schemas.synchronized(
       schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[Probed, StructType]()))
     Option(cache.get(key)).getOrElse {
@@ -293,31 +286,14 @@ object PgFederation {
   /** Drop every session's cached schema of one shard table, so the
     * next statement that reads it probes again. Scan tasks call this
     * on a failed remote read; they run in the driver's JVM in this
-    * repo's local sessions, and on a cluster [[statement]] still
-    * drops it on the driver.
+    * repo's local sessions. `Cli federate` calls it for every wire leg
+    * when its statement fails, which on a cluster still drops it on
+    * the driver.
     */
   def forget(host: String, port: Int, table: String): Unit =
     schemas.synchronized {
       schemas.values.forEach(_.keySet.removeIf(k => k.host == host && k.port == port && k.table == table))
     }
-
-  /** Run one statement over wire legs: if it fails, for any reason —
-    * a schema mismatch in a scan, or an analysis error on a column
-    * the cached schema lacks — every shard table it read drops its
-    * cached schema, and the next statement probes again.
-    */
-  def statement[T](body: => T): T = {
-    val outer = statementReads.get
-    val reads = mutable.Set.empty[(String, Int, String)]
-    statementReads.set(reads)
-    try body
-    catch {
-      case NonFatal(e) =>
-        reads.foreach { case (h, p, t) => forget(h, p, t) }
-        throw e
-    }
-    finally statementReads.set(outer)
-  }
 
   // ---- predicate pushdown -------------------------------------------
 
@@ -364,9 +340,10 @@ object PgFederation {
     * Spark: comparisons, IN, IS [NOT] NULL, AND, OR and NOT on
     * integral, boolean and date columns with literals of those types;
     * `=` and IN on strings whose literals hold no backslash (Spark SQL
-    * reads a backslash as an escape, PostgreSQL does not); only on
-    * [[plainName]] columns. Doubles, decimals and timestamps stay in
-    * Spark, and so does every string ordering (collations differ).
+    * reads a backslash as an escape, PostgreSQL does not), outside any
+    * NOT; only on [[plainName]] columns. Doubles, decimals and
+    * timestamps stay in Spark, and so does every string ordering
+    * (collations differ).
     */
   private[sources] def pushable(f: Filter, types: Map[String, DataType]): Option[String] = {
     def column(a: String, ok: DataType => Boolean): Option[DataType] =
@@ -389,7 +366,10 @@ object PgFederation {
       case IsNotNull(a) => column(a, ordered).map(_ => s"$a IS NOT NULL")
       case And(l, r) => for (x <- pushable(l, types); y <- pushable(r, types)) yield s"($x) AND ($y)"
       case Or(l, r)  => for (x <- pushable(l, types); y <- pushable(r, types)) yield s"($x) OR ($y)"
-      case Not(c)    => pushable(c, types).map(x => s"NOT ($x)")
+      // a string `=` may over-return on PostgreSQL (char(n) ignores
+      // trailing blanks, citext and some collations ignore case);
+      // negated it would drop rows, so NOT covers only ordered columns
+      case Not(c) => pushable(c, types.filter { case (_, t) => ordered(t) }).map(x => s"NOT ($x)")
       case _ => None
     }
   }
